@@ -114,9 +114,9 @@ def cmd_tasks(names):
 
 
 def cmd_crawl(event_dir: str = "/tmp/spark-events-r6"):
-    """One bench.bench_crawl run with verbose phase prints AND the Spark
-    event log on; then a chronological per-stage summary (duration, task
-    count, callsite) so narrow stages inside each phase are visible."""
+    """One bench.bench_crawl run with the Spark event log on; then a
+    chronological per-stage summary (duration, task count, callsite) so
+    narrow stages inside each phase are visible."""
     import glob
     import json
 
@@ -124,7 +124,6 @@ def cmd_crawl(event_dir: str = "/tmp/spark-events-r6"):
 
     shutil.rmtree(event_dir, ignore_errors=True)
     os.makedirs(event_dir, exist_ok=True)
-    os.environ["HELIX_SPARK_VERBOSE"] = "1"
     spark = get_spark(
         app_name="helix-crawl-profile",
         master=f"local[{CPUS}]",

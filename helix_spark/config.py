@@ -55,17 +55,6 @@ class CrawlConfig:
     # every N waves (bounds read amplification on long crawls)
     compact_every: int = 16
     compact_max_files: int = 8
-    # early-commit overlap: batches at least this big split the report/seen
-    # appends into a settled half written DURING the admit job and an admit
-    # half chained after (plans/crawl.py `early`). Measured: saves ~7 s of
-    # constant post-admit commit wall at 4M-row waves, but COSTS ~2 s on
-    # tiny waves (three extra concurrent jobs contending with a short admit
-    # job), so it engages only past this threshold.
-    early_commit_min_batch: int = 50_000
-    # ...and only with at least this many task slots: below it the admit
-    # job owns every core through its stage tails and the overlap is pure
-    # contention (measured at local[4])
-    early_commit_min_parallelism: int = 8
     # politeness join: broadcast host_state (one row per host) up to this
     # many hosts; past it the select join switches to a shuffle-hash join
     # (broadcasting tens of millions of rows per wave is a driver/executor
@@ -81,53 +70,6 @@ class CrawlConfig:
     # a CoW merge degenerates to an O(table) rewrite per wave (the exact
     # failure mode documented for seen/report in plans/crawl.py)
     host_state_lsm_min_hosts: int = 50_000
-    # storage level NAME (pyspark.StorageLevel attribute) for the wave
-    # loop's two heavy localCheckpoints (admit rank, verified batch).
-    # Default "MEMORY_AND_DISK" is PySpark's SERIALIZED level; with
-    # spark.rdd.compress=true (session.py default) the blocks are
-    # lz4-compressed bytes instead of JVM object graphs. Paired A/B on the
-    # 6M-URL scaling harness (BENCH/BASELINE.md round 5): ties the
-    # deserialized default at local[4], beats it at local[16] (52.6/55.1 s
-    # vs 59.0/67.0 s paired legs) — the deser object graphs cost GC scan +
-    # memory bandwidth, exactly what the 16-core legs are starved of.
-    # Serialized WITHOUT compression is strictly worse than either (~35%):
-    # serialization CPU without the byte shrink. None → JVM deserialized.
-    wave_checkpoint_storage: str | None = "MEMORY_AND_DISK"
-    # adaptive shuffle fanout: the static planner sizes post-shuffle stages
-    # from driver-known row counts at ~this many rows per partition (capped
-    # at 2×cores, floored at 8). Round-6 tested the "waves run at 8-10 busy
-    # cores — widen the stages" hypothesis with paired alternating legs at
-    # the bench config: 4k rows/partition measured STRICTLY WORSE
-    # (34.9/39.0 s vs 23.1/23.8 s crawl) — the extra tasks/blocks cost more
-    # than the parallelism buys; the idle cores come from the serial
-    # stage chain + driver gaps, not partition count. 25k stands; the knob
-    # stays so a cluster deployment can re-derive it from measurements.
-    fanout_rows_per_partition: int = 25_000
-    # pipelined wave commit: only the two artifacts the NEXT wave's select
-    # actually depends on — the frontier append and a tiny host-updates
-    # checkpoint (which carries the cursor-minima/fresh-host Observation) —
-    # are waited for on the wave's critical path; the remaining table
-    # writes (report/seen/metrics/crawl_log/bloom/host_state) plus the
-    # atomic manifest commit run in a background tail that overlaps the
-    # next wave's select+verify. The admit phase joins the tail before
-    # touching seen/bloom/HEAD, so every read still sees a fully committed
-    # wave; a tail failure surfaces there and aborts the crawl with the
-    # wave unpublished (crash semantics identical to the synchronous
-    # order). False = join the tail immediately (the pre-round-6 ordering;
-    # same code path, kept for A/B and for bisecting).
-    pipelined_commit: bool = True
-    # overlapped select materialization: the wave's select+verify
-    # checkpoint is LAZY and materialized by the (tiny) wave-stats agg job
-    # running in a background thread, while the driver builds the admit
-    # tree (admissions → enrichment → dedup → seen anti-join) — the wave's
-    # only remaining idle-cluster driver window (~0.6-0.9 s/wave measured
-    # at the bench config). Results are identical by construction: the
-    # stats agg computes the same aggregates over the same checkpointed
-    # rows the old select-job Observation did, and the admit tree is lazy
-    # until the rank job (which still waits for the stats' boundaries).
-    # False = eager checkpoint then a synchronous stats agg over the cached
-    # blocks (the A/B leg isolating the overlap).
-    overlap_select_build: bool = True
     # rank buckets per core: the admit rank window hash-partitions by
     # bucket id, and with n_buckets ≈ partitions balls-into-bins collisions
     # give the window stage a ~2× straggler; more (smaller) buckets even

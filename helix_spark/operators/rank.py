@@ -152,8 +152,8 @@ def bucketed_global_rank(
     if os.environ.get("HELIX_SPARK_PLAN_LOG"):
         PLAN_LOG.append("rank:" + pre._jdf.queryExecution().executedPlan().toString())
     # storage_level None → JVM default (deserialized rows); callers on a
-    # bandwidth-bound box pass a serialized level (config.py
-    # wave_checkpoint_storage) so the cached blocks cost bytes, not bus
+    # bandwidth-bound box pass a serialized level (plans/crawl.py
+    # _CKPT_LEVEL) so the cached blocks cost bytes, not bus
     _t_ck = None
     if os.environ.get("HELIX_SPARK_VERBOSE"):
         import time as _time

@@ -461,7 +461,6 @@ def connected_components(
     pairs: DataFrame, nodes: DataFrame,
     id_a: str = "id_a", id_b: str = "id_b", node_col: str = "doc_id",
     max_iters: int = 30,
-    ckpt_every: int = 1,
     driver_max_edges: int = 1_000_000,
     _rounds_out: list | None = None,
 ) -> DataFrame:
@@ -486,18 +485,14 @@ def connected_components(
     Both are |E|-sized join/aggregate rounds — never anything O(n²). At
     the fixpoint the edge set is a forest of depth-1 stars centered at
     each component's minimum id, read off directly as the labels. Fixpoint
-    detection: the edge-set digest (count + mod-sums) stops changing.
-    ``ckpt_every`` rounds are chained LAZILY into one materialization
-    (checkpoint + digest); the star rounds are idempotent at the fixpoint
-    so up to ``ckpt_every − 1`` extra rounds past it are harmless (the
-    algorithm converges monotonically — no cycles — so a stable composite
-    digest IS the fixpoint). DEFAULT 1: the round-6 A/B at sf0.1 measured
-    cadence 2 at 4.7-5.4 s vs cadence 1 at 2.1-2.9 s and cadence 3 at
-    39.5 s — real near-dup graphs fixpoint in ~2 rounds, so chaining only
-    adds rounds (detection needs 2 materializations ⇒ ≥ 2·ckpt_every
-    rounds) and the deeper per-job plans cost far more than the saved
-    job overhead. The knob stays for long-diameter graphs where rounds ≫
-    and per-round overhead genuinely dominates.
+    detection: the edge-set digest (count + mod-sums) stops changing
+    (the algorithm converges monotonically — no cycles — so a stable
+    composite digest IS the fixpoint). Every round is materialized
+    (checkpoint + digest): chaining rounds lazily into one materialization
+    measured worse at sf0.1 in the round-6 A/B (2 rounds per checkpoint
+    4.7-5.4 s, 3 rounds 39.5 s, vs 2.1-2.9 s) — real near-dup graphs
+    fixpoint in ~2 rounds, so chaining only adds rounds and the deeper
+    per-job plans cost far more than the saved job overhead.
 
     RAISES RuntimeError if max_iters rounds pass without convergence
     (30 rounds covers any real graph at O(log n); silently returning
@@ -608,12 +603,8 @@ def connected_components(
     converged = False
     rounds = 0
     while rounds < max_iters and not converged:
-        steps = min(max(ckpt_every, 1), max_iters - rounds)
-        lazy = edges
-        for _ in range(steps):
-            lazy = _one_round(lazy)
-            rounds += 1
-        new, cur = _ck_with_digest(lazy)
+        new, cur = _ck_with_digest(_one_round(edges))
+        rounds += 1
         free_local_checkpoint(edges)
         edges = new
         if cur == prev:

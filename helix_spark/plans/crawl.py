@@ -41,12 +41,13 @@ Scale posture:
 from __future__ import annotations
 
 import os
-import time
+from concurrent.futures import ThreadPoolExecutor, wait
 from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 from pyspark.sql.types import (
     BooleanType,
     IntegerType,
@@ -110,12 +111,61 @@ FRONTIER_COLS = [
 
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/?#@]*@)?([^/?#]*)"
 
+# Storage level of the wave loop's heavy localCheckpoints (select+verify
+# batch, admit rank, host-updates delta). PySpark's MEMORY_AND_DISK is the
+# SERIALIZED level: with spark.rdd.compress=true (session.py) the blocks are
+# lz4-compressed bytes instead of JVM object graphs. Paired A/B on the 6M-URL
+# scaling harness (BENCH/BASELINE.md round 5): ties the deserialized level at
+# local[4] and beats it at local[16], where the object graphs' GC scans and
+# memory bandwidth are what the cores are starved of.
+_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
+# static-planner shuffle fanout: ~this many rows per post-shuffle partition
+# (_set_shuffle_fanout). 4k rows measured strictly worse in paired legs
+# (BENCH/BASELINE.md round 6): the idle cores come from the serial stage
+# chain and driver gaps, not from the partition count.
+_FANOUT_ROWS_PER_PARTITION = 25_000
+# Workers of the engine's one thread pool. At most one commit tail is in
+# flight; at its widest the pool holds the tail task, its six table jobs and
+# the next wave's select stats job — eight tasks, all running at once. Only
+# two of them ever block on another task (the tail on its jobs, the metrics
+# job on the report write), so the pool can never be filled by waiters.
+_POOL_WORKERS = 8
+
 
 @dataclass
 class CrawlOutcome:
     waves: int
     aborted: bool
     total_fetched: int
+
+
+@dataclass
+class _Selection:
+    """A wave's select phase: the checkpointed select+verify batch, its
+    stats, the settled-fetch rows it commits, and the lazy admit tree."""
+    wave: int
+    verified: DataFrame
+    stats: dict
+    report_rows: DataFrame
+    seen_updates: DataFrame
+    log_rows: DataFrame
+    fresh: DataFrame
+
+    @property
+    def batch_count(self) -> int:
+        return self.stats.get("n") or 0
+
+
+@dataclass
+class _Admission:
+    """A wave's admit phase: the ranked admissions, split by category, and
+    the changed host_state rows."""
+    frontier: DataFrame
+    report: DataFrame
+    seen: DataFrame
+    counts: dict[int, int]
+    n_frontier: int
+    host_updates: DataFrame
 
 
 class CrawlEngine:
@@ -181,13 +231,6 @@ class CrawlEngine:
             self.seeds_df = spark.createDataFrame(
                 [(s,) for s in sorted(set(self.seed_canon))], "__seed_key string"
             ).localCheckpoint()
-        # wave-loop heavy-checkpoint storage (config.wave_checkpoint_storage):
-        # resolved once to a StorageLevel, None = JVM default (deserialized)
-        self._ckpt_level = None
-        if cfg.wave_checkpoint_storage:
-            from pyspark.storagelevel import StorageLevel
-
-            self._ckpt_level = getattr(StorageLevel, cfg.wave_checkpoint_storage)
         self.bloom: PartitionedBloom | None = None
         # The big URL Column expressions cost ~0.3-0.4 s of py4j round-trips
         # EACH to construct, and a wave needs them every iteration. Column
@@ -210,21 +253,27 @@ class CrawlEngine:
         )
         self.counter = 0
         self.live = 0  # exact frontier live-row count (admitted − consumed)
-        # host_state row count (exact, ridden on the overwrite's
-        # Observation each wave; persisted in commit metrics for resume) —
-        # drives the broadcast-vs-shuffle-hash politeness join decision
+        # host_state row count (exact: each commit adds the fresh-host count
+        # ridden on its host-updates checkpoint's Observation; persisted in
+        # commit metrics for resume) — drives the broadcast-vs-shuffle-hash
+        # politeness join decision and the LSM migration
         self.n_hosts = 0
-        # per-host-bucket cursor minima from the same Observation — the
-        # steady-state _cursor_mins source (no per-wave agg/collect job);
-        # None until the first host_state write (bootstrap/resume recompute)
+        # per-host-bucket cursor minima merged from the same Observation —
+        # the steady-state _cursor_mins source (no per-wave agg/collect
+        # job); None until computed from the full table or seeded by the
+        # first commit into an empty host_state
         self._mins_cache: dict[int, int] | None = None
         self.aborted = False
-        self.verbose = bool(os.environ.get("HELIX_SPARK_VERBOSE"))
-        # pipelined wave commit (cfg.pipelined_commit): the background tail
-        # (report/seen/metrics/bloom/host_state writes + the atomic commit)
-        # of the PREVIOUS wave, joined before the next admit touches
-        # seen/bloom/HEAD; the pending frontier manifest + host-updates
-        # delta checkpoint are what the next select reads instead
+        # runs the select stats job, the critical-path frontier append and
+        # the commit tail with its table jobs (see _POOL_WORKERS)
+        self._pool = ThreadPoolExecutor(
+            max_workers=_POOL_WORKERS, thread_name_prefix="helix-crawl"
+        )
+        # pipelined wave commit: the background tail (report/seen/metrics/
+        # bloom/host_state writes + the atomic commit) of the PREVIOUS wave,
+        # joined before the next admit touches seen/bloom/HEAD; the pending
+        # frontier manifest + host-updates delta checkpoint are what the
+        # next select reads instead
         self._tail_future = None
         self._tail_frees: list = []
         self._pending_frontier_m: str | None = None
@@ -233,8 +282,8 @@ class CrawlEngine:
 
     def _wait_tail(self) -> None:
         """Join the previous wave's commit tail: re-raises a tail failure
-        (the wave is then unpublished — identical crash semantics to the
-        synchronous order), frees the wave checkpoints the tail's writes
+        (the wave is then unpublished, and the crawl resumes from the wave
+        before it), frees the wave checkpoints the tail's writes
         were reading, and drops the pending-manifest overrides (HEAD now
         covers them)."""
         fut, self._tail_future = self._tail_future, None
@@ -255,16 +304,14 @@ class CrawlEngine:
             self._pending_hs_delta = None
 
     def _compose_hs(self, committed):
-        """host_state view for the SELECT phase under pipelined commit:
-        committed table (HEAD — the previous wave's tail may not have
-        published yet) overlaid with the pending host-updates delta
-        checkpoint. Exact either way: if the tail already committed, the
-        delta rows equal their committed selves and the anti-join+union is
-        idempotent. The delta is replaced by an empty RDD-backed frame when
-        none is pending so the select plan keeps ONE operator shape across
-        waves (plan_review wave_plan_identity)."""
-        if not self.cfg.pipelined_commit:
-            return committed
+        """host_state view for the SELECT phase: committed table (HEAD —
+        the previous wave's tail may not have published yet) overlaid with
+        the pending host-updates delta checkpoint. Exact either way: if the
+        tail already committed, the delta rows equal their committed selves
+        and the anti-join+union is idempotent. The delta is replaced by an
+        empty RDD-backed frame when none is pending so the select plan
+        keeps ONE operator shape across waves (plan_review
+        wave_plan_identity)."""
         delta = self._pending_hs_delta
         if committed is None:
             return delta
@@ -302,11 +349,10 @@ class CrawlEngine:
         # split per core keeps the scan (and the map side of the politeness
         # window) as wide as the cluster at any scale; it cannot split
         # below one file per task, so tiny reads are unaffected.
-        if not os.environ.get("HELIX_NO_SCAN_FLOOR"):  # A/B hook
-            conf.set(
-                "spark.sql.files.minPartitionNum",
-                str(self.spark.sparkContext.defaultParallelism),
-            )
+        conf.set(
+            "spark.sql.files.minPartitionNum",
+            str(self.spark.sparkContext.defaultParallelism),
+        )
         # Catalyst constraint propagation off for the wave loop: inferring
         # constraints over the admit tree (a regex-heavy canonicalization
         # forest re-analyzed EVERY wave) is pure driver time that grows with
@@ -317,8 +363,7 @@ class CrawlEngine:
         # unaffected by construction (an optimizer-only toggle). Restored on
         # exit — the analytics battery keeps the default.
         prev_cprop = conf.get("spark.sql.constraintPropagation.enabled", "true")
-        if not os.environ.get("HELIX_KEEP_CONSTRAINT_PROP"):  # A/B hook
-            conf.set("spark.sql.constraintPropagation.enabled", "false")
+        conf.set("spark.sql.constraintPropagation.enabled", "false")
         try:
             yield
         finally:
@@ -341,7 +386,7 @@ class CrawlEngine:
         results never depend on partition counts."""
         cores = self.spark.sparkContext.defaultParallelism
         target = max(
-            8, min(2 * cores, est_rows // self.cfg.fanout_rows_per_partition + 1)
+            8, min(2 * cores, est_rows // _FANOUT_ROWS_PER_PARTITION + 1)
         )
         self.spark.conf.set("spark.sql.shuffle.partitions", str(target))
 
@@ -511,12 +556,11 @@ class CrawlEngine:
         """The PLAN-BUILD half of admission: enrichment → first-wins dedup →
         bloom/seen anti-join, returned as a LAZY DataFrame (no job). Split
         from ``_admit_finish`` so the wave loop can build this tree on the
-        driver WHILE the select checkpoint job runs on the cluster
-        (cfg.overlap_select_build) — everything here is independent of the
-        select stats; only the rank's bucket boundaries (and the job
-        submission itself) need them. Reads the seen table at HEAD, so the
-        previous wave's commit tail must be joined first."""
-        _t_en = time.time()
+        driver WHILE the select checkpoint job runs on the cluster —
+        everything here is independent of the select stats; only the rank's
+        bucket boundaries (and the job submission itself) need them. Reads
+        the seen table at HEAD, so the previous wave's commit tail must be
+        joined first."""
         cfg = self.cfg
         status = F.when(F.col("resolved").isNull(), F.lit(STATUS_MALFORMED_URI)).otherwise(
             self._status_resolved
@@ -590,16 +634,8 @@ class CrawlEngine:
             "ctype_pre", "size_pre", "is_internal", "parent_priority", "seq",
         )
 
-        t0 = time.time()
-        if self.verbose:
-            print(f"[helix-spark]     admit enrich-build {t0 - _t_en:.1f}s",
-                  flush=True)
         deduped = first_wins_in_batch(enriched, "key_hash", ["parent_priority", "seq"])
-        if self.verbose:
-            print(f"[helix-spark]     admit dedup-build {time.time() - t0:.1f}s",
-                  flush=True)
-        _t_aj = time.time()
-        fresh = anti_join_seen(
+        return anti_join_seen(
             deduped, self.wh, self.bloom, key="key_hash",
             semi_broadcast_max_rows=cfg.semi_broadcast_max_rows,
             maybe_rows=est_candidates,
@@ -607,10 +643,6 @@ class CrawlEngine:
             # row count — free relative-size signal for the join strategy
             seen_rows=self.counter,
         )
-        if self.verbose:
-            print(f"[helix-spark]     admit anti-build {time.time() - _t_aj:.1f}s",
-                  flush=True)
-        return fresh
 
     def _admit_finish(self, fresh: DataFrame, wave: int,
                       boundaries: list[int] | None = None,
@@ -625,7 +657,6 @@ class CrawlEngine:
 
         → (frontier_rows, report_rows, seen_rows, partition_counts,
         n_frontier, new_host_buckets | None)"""
-        t0 = time.time()
         # ONE job, ONE materialization: the bucketed rank's window runs
         # inside the same job as enrichment/dedup/anti-join, per-bucket
         # counts + the frontier-insert count ride its Observation, and the
@@ -654,7 +685,7 @@ class CrawlEngine:
             extra_metrics={"__ok": F.count_if(
                 (F.col("url_status") == 0) & ~F.col("robots_blocked")
             )},
-            storage_level=self._ckpt_level,
+            storage_level=_CKPT_LEVEL,
             counts_extra=counts_extra,
         )
         n_frontier = int(extras["__ok"] or 0)
@@ -662,12 +693,6 @@ class CrawlEngine:
         if host_bucket_mod:
             new_hbs = sorted(
                 {b for group in extras["__hbs"] for b in (group or [])}
-            )
-        if self.verbose:
-            print(
-                f"[helix-spark]   admit: single-job rank+ckpt={time.time() - t0:.1f}s "
-                f"rows={sum(counts.values())}",
-                flush=True,
             )
 
         is_bad_f = F.col("url_status") != 0
@@ -884,91 +909,26 @@ class CrawlEngine:
 
     # ----------------------------------------------------------- bootstrap
     def bootstrap_frontier(self, urls: DataFrame) -> int:
-        with self._static_planner():
-            return self._bootstrap_frontier(urls)
-
-    def _bootstrap_frontier(self, urls: DataFrame) -> int:
         """Pre-populate the frontier from a DataFrame of absolute URLs
         (column ``url``) — the resumed-crawl-with-backlog scenario used for
-        frontier-throughput benchmarking at 10^x scale. URLs are admitted
-        through the full pipeline (canonicalize, robots, dedup, bloom) with
-        themselves as parents (internal, non-orphan). Returns admitted count.
+        frontier-throughput benchmarking at 10^x scale; ``run(resume=True)``
+        then crawls the backlog. URLs are admitted through the full
+        pipeline (canonicalize, robots, dedup, bloom + exact seen check)
+        with themselves as parents (internal, non-orphan), so onto an
+        existing warehouse the URLs it already holds are dropped. Returns
+        admitted count.
 
         Admission order is ``xxhash64(url)`` — deterministic across runs and
         cluster layouts (monotonically_increasing_id is partition-layout-
         dependent; see operators/rank.py), so two bootstrap+resume runs
         produce identical frontier priorities."""
-        items = urls.select(
-            F.col("url").alias("raw"),
-            F.col("url").alias("resolved"),
-            F.col("url").alias("parent_url"),
-            F.regexp_extract(F.col("url"), _HOST_RE, 1).alias("parent_host"),
-            F.lit(True).alias("is_extracted"),
-            F.lit(0).alias("status_pre"),
-            F.lit(None).cast("string").alias("ctype_pre"),
-            F.lit(None).cast("long").alias("size_pre"),
-            F.lit(True).alias("is_internal_admit"),
-            F.xxhash64(F.col("url")).alias("parent_priority"),
-            F.lit(0).cast("int").alias("seq"),
-        )
-        for f in ADMIT_SCHEMA.fields:
-            items = items.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        self._init_filters()
-        # bootstrap parent_priority is xxhash64(url) — uniform over int64,
-        # so the rank buckets come from the analytic grid (no data pass)
-        frontier, report, seen, counts, n_frontier = self.admit(
-            items, wave=0, boundaries=uniform_hash_boundaries(self._rank_buckets)
-        )
-        self._ingest_filters(seen)
-        self.counter += sum(counts.values())
-        self.live += n_frontier
-        # Register the bootstrapped hosts (cursor −1, eligible now) — the
-        # exact defaults the select join coalesces for an ABSENT host, so
-        # selection is unchanged. Without this the bootstrap was the one
-        # frontier producer violating the "host_state covers every frontier
-        # host" invariant the pipelined commit's incremental fresh-host
-        # count relies on: bootstrapped hosts are fetched before ever being
-        # 'fresh' (their first host_state row carries a real cursor), the
-        # count never sees them, n_hosts stays near 0, and at ≥
-        # cfg.host_state_lsm_min_hosts the LSM migration NEVER fires — an
-        # O(total hosts) host_state overwrite every wave plus a wrong input
-        # to the politeness broadcast-vs-shuffle decision (measured:
-        # scripts/lsm_bench.py at 120k hosts registered n_hosts=7, zero LSM
-        # buckets). The bootstrap commit's full-overwrite Observation sets
-        # n_hosts and the cursor-minima cache exactly.
-        new_hosts = None
-        hs = self.read_host_state()
-        if n_frontier > 0:
-            new_hosts = frontier.select("host").distinct().select(
-                "host",
-                F.lit(0).cast("long").alias("next_allowed_wave"),
-                F.lit(-1).cast("long").alias("cursor"),
-            )
-            if hs is not None:
-                # bootstrap onto an existing warehouse: same composition as
-                # _enqueue_urls — keep registered hosts, add genuinely-new
-                # ones (and make the cursor cache exact before any LSM merge)
-                if self.wh.num_buckets("host_state"):
-                    self._cursor_mins(hs)
-                new_hosts = new_hosts.join(
-                    self.read_host_state(resolve=False).select("host"),
-                    on="host", how="left_anti",
-                )
-                hs = hs.unionByName(new_hosts)
-            else:
-                hs = new_hosts
-        self._commit_wave(-1, frontier, report, seen, hs, 0, counts,
-                          n_frontier=n_frontier, host_updates=new_hosts)
-        free_local_checkpoint(frontier)  # committed to parquet; blocks dead
+        with self._static_planner():
+            admitted = self._ingest_urls(urls, bootstrap=True)
         # seed the first wave's join-strategy estimate from the backlog size
-        self._est_candidates = max(sum(counts.values()), 1) * 4
-        return sum(counts.values())
+        self._est_candidates = max(admitted, 1) * 4
+        return admitted
 
     def enqueue_urls(self, urls: DataFrame) -> int:
-        with self._static_planner():
-            return self._enqueue_urls(urls)
-
-    def _enqueue_urls(self, urls: DataFrame) -> int:
         """Mid-crawl URL feed ingestion — a crawl discovers its input over
         time (new seed lists, sitemap drops, a readStream of URLs via
         foreachBatch: streaming/events.seed_feed_query). URLs pass the FULL
@@ -978,13 +938,24 @@ class CrawlEngine:
         everything queued (the global counter only grows, preserving the
         cursor model's prefix property). One atomic snapshot per call; safe
         between run() calls and across resume. Returns admitted count."""
+        with self._static_planner():
+            return self._ingest_urls(urls, bootstrap=False)
+
+    def _ingest_urls(self, urls: DataFrame, bootstrap: bool) -> int:
+        """Admit absolute URLs (column ``url``) as their own parents and
+        commit them. A feed commit takes the next wave number; a bootstrap
+        commits just before it, so a resumed crawl's first wave is the
+        one the backlog was admitted for."""
         self._wait_tail()  # defensive: run() always joins its tail on exit
         head = self.wh.head_commit()
         if head and self.counter == 0:
-            # engine constructed fresh against an existing warehouse
-            self.counter = head["metrics"].get("counter", 0)
-            self.live = head["metrics"].get("live", 0)
+            # engine constructed fresh against an existing warehouse: new
+            # priorities must continue above the queued ones, and n_hosts
+            # must count the registered hosts
+            self._restore_counters(head)
         if self.bloom is None:
+            # the warehouse's filter, never a fresh empty one: a bloom-
+            # negative row skips the exact seen check
             self._load_filters()
         wave = (head["wave"] + 1) if head else 0
         items = urls.select(
@@ -1002,47 +973,64 @@ class CrawlEngine:
         )
         for f in ADMIT_SCHEMA.fields:
             items = items.withColumn(f.name, F.col(f.name).cast(f.dataType))
+        # parent_priority is xxhash64(url) — uniform over int64, so the
+        # rank buckets come from the analytic grid (no data pass)
         frontier, report, seen, counts, n_frontier = self.admit(
             items, wave, boundaries=uniform_hash_boundaries(self._rank_buckets)
         )
-        self._ingest_filters(seen)
-        self.counter += sum(counts.values())
-        self.live += n_frontier
-        # register the new hosts so cursor-based range pruning stays exact
-        hs = self.read_host_state()
-        # The commit below MERGES per-bucket cursor minima from the CHANGED
-        # rows into self._mins_cache (plans/crawl._update_host_stats). On a
-        # fresh engine over an existing LSM host_state the cache is None, and
-        # merging into an empty cache would seed a PARTIAL cache whose
-        # entries come from changed rows only — the next wave's merge could
-        # then assign a bucket a minimum ABOVE the true min of an unchanged
-        # laggard host in that bucket, and range pruning would drop frontier
-        # leaves that still hold its live rows (silent URL loss). Make the
-        # cache exact FIRST: _cursor_mins recomputes it from the full table
-        # when (and only when) it is None.
-        if hs is not None and self.wh.num_buckets("host_state"):
-            self._cursor_mins(hs)
-        new_hosts = None
-        if hs is not None:
-            new_hosts = (
-                frontier.select("host").distinct()
-                .join(
-                    self.read_host_state(resolve=False).select("host"),
-                    on="host", how="left_anti",
-                )
-                .select(
-                    "host",
-                    F.lit(0).cast("long").alias("next_allowed_wave"),
-                    F.lit(-1).cast("long").alias("cursor"),
-                )
-            )
-            hs = hs.unionByName(new_hosts)
-        self._commit_wave(wave, frontier, report, seen, hs, 0, counts,
-                          n_frontier=n_frontier, host_updates=new_hosts)
-        free_local_checkpoint(frontier)
+        self._commit_admission(wave - 1 if bootstrap else wave,
+                               frontier, report, seen, counts, n_frontier)
         return sum(counts.values())
 
-    # ------------------------------------------------------------- wave body
+    def _restore_counters(self, head: dict) -> None:
+        m = head["metrics"]
+        self.counter = m.get("counter", 0)
+        self.live = m.get("live", 0)
+        self.n_hosts = m.get("n_hosts", 0)
+
+    def _commit_admission(self, wave, frontier, report, seen, counts,
+                          n_frontier) -> None:
+        """Commit an admission made outside the wave loop (seeds, bootstrap,
+        feed) on the wave loop's commit schedule, and wait for it.
+
+        Its genuinely new hosts are registered in host_state with cursor −1,
+        eligible now — exactly the defaults the select join coalesces for an
+        ABSENT host, so selection is unchanged. It keeps the invariant
+        "host_state covers every frontier host" that the incremental
+        fresh-host count and the cursor-minima pruning rely on (measured
+        before bootstrapped hosts were registered: scripts/lsm_bench.py at
+        120k hosts registered n_hosts=7 and never migrated to the LSM
+        layout). Nothing admitted → no host_state write at all."""
+        self.counter += sum(counts.values())
+        self.live += n_frontier
+        new_hosts = None
+        if n_frontier > 0:
+            new_hosts = frontier.select("host").distinct()
+            registered = self.read_host_state(resolve=False)
+            if registered is not None:
+                # the commit MERGES the new hosts' minima into the cursor
+                # cache. A fresh engine's cache is None: make it exact from
+                # the full table first — a cache seeded by the merge alone
+                # holds only the new hosts' buckets, and range pruning would
+                # then drop leaves that still hold a laggard host's live rows
+                if self._mins_cache is None:
+                    self._cursor_mins(self.read_host_state())
+                new_hosts = new_hosts.join(
+                    registered.select("host"), on="host", how="left_anti"
+                )
+            new_hosts = new_hosts.select(
+                "host",
+                F.lit(0).cast("long").alias("next_allowed_wave"),
+                F.lit(-1).cast("long").alias("cursor"),
+            )
+        manifests, host_updates = self._commit_critical(
+            frontier, n_frontier, new_hosts
+        )
+        self._commit_tail([frontier], wave, manifests, report, seen, seen,
+                          host_updates, 0, counts)
+        self._wait_tail()
+
+    # ------------------------------------------------------------- wave loop
     def run(self, resume: bool = False) -> CrawlOutcome:
         with self._static_planner():
             primary: BaseException | None = None
@@ -1062,542 +1050,325 @@ class CrawlEngine:
                     if primary is None:
                         raise
 
-    def _run(self, resume: bool = False) -> CrawlOutcome:
-        cfg, wh, spark = self.cfg, self.wh, self.spark
-        head = wh.head_commit() if resume else None
-        if head:
-            start_wave = head["wave"] + 1
-            self.counter = head["metrics"].get("counter", 0)
-            self.live = head["metrics"].get("live", 0)
-            self.n_hosts = head["metrics"].get("n_hosts", 0)
-            self._load_filters()
-        else:
-            self._init_filters()
-            seeds = spark.createDataFrame(
-                [
-                    (s, s, None, None, True, 0, None, None, True, 0, i)
-                    for i, s in enumerate(cfg.seeds)
-                ],
-                ADMIT_SCHEMA,
-            )
-            frontier, report, seen, counts, n_frontier = self.admit(seeds, wave=0)
-            self._ingest_filters(seen)
-            self.counter += sum(counts.values())
-            self.live += n_frontier
-            # register the seed hosts (cursor −1, eligible now) — exactly
-            # the defaults the select join coalesces for an ABSENT host, so
-            # selection is unchanged; it closes the one gap in the "host_
-            # state covers every frontier host" invariant (the enqueue path
-            # already registers), which the pipelined commit's incremental
-            # fresh-host counting relies on for an exact n_hosts.
-            seed_hosts = None
-            if n_frontier > 0:
-                seed_hosts = frontier.select("host").distinct().select(
-                    "host",
-                    F.lit(0).cast("long").alias("next_allowed_wave"),
-                    F.lit(-1).cast("long").alias("cursor"),
-                )
-            self._commit_wave(-1, frontier, report, seen, seed_hosts, 0, counts,
-                              n_frontier=n_frontier, host_updates=seed_hosts)
-            free_local_checkpoint(frontier)
-            start_wave = 0
-
+    def _run(self, resume: bool) -> CrawlOutcome:
+        cfg = self.cfg
+        wave = self._start(resume)
         total_fetched = 0
-        wave = start_wave
-        while wave < cfg.max_waves:
-            t_wave = time.time()
-            phase_t: dict[str, float] = {}
-
-            def _mark(name: str, _last=[time.time()]):
-                now = time.time()
-                phase_t[name] = round(now - _last[0], 1)
-                _last[0] = now
-
-            if self.live <= 0:  # exact driver-side counter — no frontier scan
+        # self.live is an exact driver-side counter — no frontier scan
+        while wave < cfg.max_waves and self.live > 0:
+            sel = self._select(wave)
+            if sel is None:
                 break
-            t0_sv = time.time()
-            # pipelined commit: the previous wave's tail may not have
-            # published yet — read the frontier through the pending
-            # manifest (written on that wave's critical path) and overlay
-            # host_state with the pending delta checkpoint; both reads are
-            # exact whether or not the tail has since committed
-            pend_f = self._pending_frontier_m
-            host_state = self._compose_hs(self.read_host_state())
-            mins = self._cursor_mins(host_state)
-            frontier = wh.read_ranged("frontier", bucket_mins=mins,
-                                      manifest_file=pend_f)
-            if frontier is None:
-                break
-            # the select join only needs host rows that can match a live
-            # frontier row; host_state shares the frontier's host-bucket
-            # spec once LSM, so fully-consumed buckets drop off BOTH scans
-            # from the manifests alone (10^9-host posture: the politeness
-            # read is O(live-bucket hosts), not O(all hosts))
-            hs_select = host_state
-            if wh.num_buckets("host_state") == self._frontier_nb():
-                live_hbs = wh.ranged_live_buckets("frontier", bucket_mins=mins,
-                                                  manifest_file=pend_f)
-                if live_hbs is not None:
-                    hs_select = self._compose_hs(
-                        self.read_host_state(buckets=live_hbs)
-                    )
-            self._set_shuffle_fanout(self.live)
-            batch = select_batch(
-                frontier, hs_select, wave, cfg.per_host_budget, cfg.salt_partitions,
-                # map-split estimate straight off the manifest: keeps the
-                # wave loop free of per-wave plan→RDD conversions
-                input_splits=wh.ranged_leaf_count("frontier", bucket_mins=mins,
-                                                  manifest_file=pend_f),
-                # size-aware: broadcasting host_state dies past the driver
-                # ceiling at web-scale host counts — switch to shuffle-hash
-                broadcast_state=self.n_hosts <= cfg.host_state_broadcast_max_rows,
-            )
-            verified = verify_batch(batch, self.pages_store)
-
-            final_host = F.regexp_extract(F.col("final_url"), _HOST_RE, 1)
-            verified = self._with_is_seed(verified, F.col("url"), "__seed_url")
-            verified = self._with_is_seed(verified, F.col("final_url"), "__seed_final")
-            recompute = (
-                F.col("is_extracted")
-                & (F.col("status_pre") == 0)
-                & ~F.col("__seed_url")
-            )
-            verified = verified.withColumn(
-                "is_internal_final",
-                F.when(
-                    recompute,
-                    self._scope_expr(F.col("__seed_final"), final_host, F.col("parent_host")),
-                ).otherwise(F.col("is_internal")),
-            )
-            # ONE materialization for select+verify (round 2 paid two). The
-            # wave stats (batch count, seed redirects, avg load, rank-bucket
-            # boundary quantiles) ride ONE tiny agg job over the checkpointed
-            # batch. Under cfg.overlap_select_build the checkpoint is LAZY
-            # and that agg — submitted from a background thread — IS the
-            # materializing action, so the driver builds the entire admit
-            # tree (admissions → enrichment → first-wins dedup → seen
-            # anti-join) WHILE the cluster runs the select job (guide §2.6:
-            # overlap independent work; the build was the wave's only
-            # remaining idle-cluster driver window — measured 0.6-0.9 s/wave
-            # at the bench config). The boundary quantiles are over the
-            # fetched pages' priorities, which is the parent_priority
-            # distribution of this wave's admissions up to out-degree
-            # weighting; rank correctness is boundary-independent
-            # (operators/rank.py), boundaries only balance the rank buckets.
-            stat_cols = [
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(
-                    F.col("redirected") & F.col("__seed_url")
-                ).alias("seed_redirects"),
-                # avg page-load time over this wave's settled fetches
-                # (README.md:28-29 / StatisticsSnapshot.cs:7 analog)
-                F.avg(F.when(~F.col("redirected"), F.col("load_ms"))).alias("avg_load_ms"),
-                F.percentile_approx(
-                    F.col("priority"),
-                    [i / self._rank_buckets for i in range(1, self._rank_buckets)],
-                    1000,
-                ).alias("rank_bounds"),
-            ]
-            if os.environ.get("HELIX_SPARK_PLAN_LOG"):
-                from helix_spark.operators.rank import PLAN_LOG
-
-                PLAN_LOG.append(
-                    "select:" + verified._jdf.queryExecution().executedPlan().toString()
-                )
-            t_drv = time.time() - t0_sv
-            overlap = cfg.overlap_select_build
-            stats_fut = None
-            if overlap:
-                verified = verified.localCheckpoint(False, self._ckpt_level)
-                from concurrent.futures import ThreadPoolExecutor
-
-                _vck = verified
-                spool = ThreadPoolExecutor(max_workers=1)
-                stats_fut = spool.submit(
-                    lambda: _vck.agg(*stat_cols).collect()[0]
-                )
-                spool.shutdown(wait=False)
-            else:
-                # synchronous order (A/B leg): eager checkpoint job now, the
-                # stats agg runs after the driver build over cached blocks
-                verified = verified.localCheckpoint(True, self._ckpt_level)
-            batch = verified  # every batch column survives verify_batch
-            # previous wave's tail: join it BEFORE anything reads HEAD (the
-            # admit tree build below embeds the seen table at HEAD, and the
-            # early-commit appends chain from HEAD manifests). Under overlap
-            # the select job may still be running — the tail's jobs were
-            # overlapped with it anyway, and nothing the tail frees is an
-            # input of the running job (the select reads the pending
-            # frontier manifest from parquet and the still-pending hs delta,
-            # which _wait_tail defers to the NEXT tail's frees).
-            self._wait_tail()
-            log_rows = batch.select(F.lit(wave).alias("wave"), "priority", "url")
-
-            redirected = verified.filter(F.col("redirected"))
-            settled = verified.filter(~F.col("redirected"))
-            report_rows = settled.select(
-                F.col("final_url").alias("verified_url"),
-                F.col("parent_url"),
-                F.col("is_internal_final").alias("is_internal"),
-                F.col("resource_type"),
-                F.col("status_code"),
-            )
-            seen_updates = settled.select(
-                F.col("final_hash").alias("key_hash"),
-                F.col("final_url").alias("key"),
-                F.col("status_code"),
-                F.lit(wave).alias("wave"),
-            )
-            renderable = settled.filter(
-                F.col("is_internal_final")
-                & ~is_broken_col(F.col("status_code"))
-                & (F.coalesce(F.col("size"), F.lit(0)) <= cfg.max_renderable_size)
-                & F.col("resource_type").isin(*RENDERABLE_TYPES)
-                & F.col("is_extracted")
-                & (F.col("status_pre") == 0)
-            )
-            _t_ca = time.time()
-            admissions = self._collect_admissions(renderable, redirected)
-            if self.verbose:
-                print(
-                    f"[helix-spark]     admissions-build {time.time() - _t_ca:.1f}s",
-                    flush=True,
-                )
-            # join-strategy estimate = prev wave's observed candidates ×4,
-            # CLAMPED from below by a driver-known UPPER BOUND on this
-            # wave's batch count (the exact count is still in flight under
-            # overlap) × the max out-degree ever observed (×2 headroom): a
-            # batch-size spike — the common way "prev wave ×4"
-            # underestimates — can never route an over-limit candidate set
-            # into the broadcast-semi path (driver OOM risk, round-3
-            # ADVICE). batch ≤ live rows and ≤ one budget per registered
-            # host, so the bound only OVERestimates — which can only flip
-            # the seen-join strategy toward the conservative shuffle-anti /
-            # bloom-bypass side (operators/dedup.anti_join_seen thresholds).
-            est = self._est_candidates
-            if est is not None and self._max_out_degree:
-                batch_bound = self.live
-                if self.n_hosts:
-                    batch_bound = min(
-                        batch_bound, self.n_hosts * cfg.per_host_budget
-                    )
-                est = max(est, batch_bound * self._max_out_degree * 2)
-            fresh = self._admit_prepare(admissions, est_candidates=est)
-            nb_hs_read = wh.num_buckets("host_state")
-            _t_sj = time.time()
-            if stats_fut is not None:
-                stats = stats_fut.result().asDict()
-            else:
-                stats = verified.agg(*stat_cols).collect()[0].asDict()
-            if self.verbose:
-                print(
-                    f"[helix-spark]     select driver={t_drv:.1f}s "
-                    f"stats-join={time.time() - _t_sj:.1f}s "
-                    f"(overlapped-build={_t_sj - t0_sv - t_drv:.1f}s)",
-                    flush=True,
-                )
-            _mark("select+verify")
-            batch_count = stats.get("n") or 0
-            if batch_count == 0:
+            if sel.batch_count == 0:
                 # logical-clock tick: every queued host is still delayed
-                # (the tail was already joined above — commits stay ordered;
+                # (_select joined the previous tail — commits stay ordered;
                 # the admit tree built for this wave is lazy and unused)
-                wh.commit(wave, {}, metrics={
+                self.wh.commit(wave, {}, metrics={
                     "counter": self.counter, "live": self.live, "batch": 0,
                     "n_hosts": self.n_hosts,
                 })
-                free_local_checkpoint(verified)
-                wave += 1
-                continue
-            total_fetched += batch_count
-
-            if stats.get("seed_redirects"):
-                # redirect at a seed aborts the crawl (CoordinatorBlock.cs:215-226).
-                # The oracle logs fetches one-by-one in priority order and stops
-                # AT the redirecting seed — truncate the batch log to match.
-                self.aborted = True
-                abort_pri = verified.filter(
-                    F.col("redirected") & F.col("__seed_url")
-                ).agg(F.min("priority").alias("p")).collect()[0]["p"]
-                log_rows = log_rows.filter(F.col("priority") <= abort_pri)
-                total_fetched += log_rows.count() - batch_count
-                mlog = wh.append("crawl_log", log_rows)
-                wh.commit(wave, {"crawl_log": mlog},
-                          metrics={"counter": self.counter, "live": self.live,
-                                   "aborted": True})
-                return CrawlOutcome(wave + 1, True, total_fetched)
-
-            # EARLY commit half: the crawl-log append and the SETTLED halves
-            # of the report/seen appends depend only on the verify
-            # checkpoint, not on admit — submit them now so their table
-            # writes run DURING the admit job (the wave's longest) instead
-            # of serializing into the post-admit commit pool. Measured: the
-            # commit phase was a ~15 s wall at BOTH local[4] and local[16]
-            # (a constant, non-scaling tail); this moves roughly half its
-            # job time under the admit window. The admit halves chain onto
-            # these manifests via append_bucketed(base_manifest=...).
-            # ADAPTIVE: on tiny waves the three extra concurrent jobs cost
-            # more in contention with a short admit job than they save
-            # (measured ~2 s/wave), so the split engages only past
-            # cfg.early_commit_min_batch — and only when the cluster has
-            # spare capacity to absorb it (< 8 slots: the admit job owns
-            # every core through its stage tails and the overlap is pure
-            # contention — measured at local[4]).
-            early = None
-            if (
-                batch_count >= cfg.early_commit_min_batch
-                and self.spark.sparkContext.defaultParallelism
-                >= cfg.early_commit_min_parallelism
-            ):
-                from concurrent.futures import ThreadPoolExecutor
-
-                obs_settled = Observation()
-                wave_report_settled = report_rows.withColumn(
-                    "wave", F.lit(wave)
-                ).observe(obs_settled, *self._report_metric_cols())
-                epool = ThreadPoolExecutor(max_workers=3)
-                early = {
-                    "pool": epool,
-                    "report": epool.submit(
-                        wh.append_bucketed, "report", wave_report_settled,
-                        "verified_url", cfg.report_buckets,
-                    ),
-                    "seen": epool.submit(
-                        wh.append_bucketed, "seen", seen_updates, "key",
-                        cfg.seen_buckets,
-                    ),
-                    "manifests": {
-                        "crawl_log": epool.submit(wh.append, "crawl_log", log_rows),
-                    },
-                    "obs_report": obs_settled,
-                }
-            # admissions ≈ batch × out-degree: re-size the admit job's
-            # fanout (a conf read at ACTION time — the admit tree was built
-            # earlier, under the select job, but its physical planning
-            # happens at the rank-job submission below)
-            self._set_shuffle_fanout(batch_count * 4)
-            new_frontier, admit_report, admit_seen, counts, n_frontier, new_hbs = (
-                self._admit_finish(
-                    fresh, wave + 1,
-                    boundaries=stats.get("rank_bounds"),
-                    host_bucket_mod=nb_hs_read or None,
-                )
-            )
-            # next wave's join-strategy estimate: waves are self-similar, and
-            # post-dedup candidates exceed post-anti admissions — pad 4× so
-            # the semi-broadcast path only engages well inside its regime
-            cands = sum(counts.values())
-            self._max_out_degree = max(
-                self._max_out_degree, -(-cands // max(batch_count, 1))
-            )
-            self._est_candidates = max(cands, batch_count) * 4
-            _mark("admit")
-            self.counter += sum(counts.values())
-            self.live += n_frontier - batch_count
-
-            # changed host rows only (fetched + genuinely new). The full
-            # next state is composed lazily and is ONLY evaluated by the
-            # small-scale overwrite / one-time LSM-migration write paths —
-            # steady-state LSM appends just hs_updates (O(batch hosts)).
-            # The already-registered anti-join only needs host_state rows
-            # that could MATCH a new host — in the LSM regime prune the raw
-            # read to the buckets the new hosts hash into (host equality
-            # cannot match across buckets), so the per-wave scan is
-            # O(new-host buckets' rows), not O(all appended rows) between
-            # compactions (round-5 ADVICE; the 10^9-host posture the
-            # politeness docstring promises). The bucket ids RIDE the admit
-            # rank's per-bucket counts job (_admit_finish host_bucket_mod) —
-            # no separate distinct job on the commit critical path.
-            hs_anti_src = None
-            if nb_hs_read:
-                hs_anti_src = self.read_host_state(
-                    buckets=new_hbs, resolve=False
-                )
+                free_local_checkpoint(sel.verified)
+            elif sel.stats.get("seed_redirects"):
+                return self._abort(sel, total_fetched)
             else:
-                hs_anti_src = self.read_host_state(resolve=False)
-            hs_updates = host_state_updates(
-                batch, self.robots, wave,
-                hs_anti_src,
-                new_hosts=new_frontier,
-            )
-            pipelined = cfg.pipelined_commit
-            prev_delta, self._delta_to_free = self._delta_to_free, None
-            frontier_manifest = None
-            if pipelined:
-                # CRITICAL PATH of the pipelined commit — only what the
-                # NEXT wave's select depends on: the frontier append (run
-                # concurrently) and the host-updates checkpoint, whose
-                # Observation carries the per-bucket cursor minima + the
-                # fresh-host count so the driver stats are current before
-                # the tail even starts. Everything else commits in the
-                # background tail, overlapped with the next select.
-                from concurrent.futures import ThreadPoolExecutor
-
-                crit = ThreadPoolExecutor(max_workers=1)
-                fut_frontier = None
-                if n_frontier > 0:
-                    fut_frontier = crit.submit(
-                        wh.append_ranged, "frontier",
-                        new_frontier.select(FRONTIER_COLS), "priority",
-                        cfg.frontier_range_bits, "host",
-                        cfg.frontier_host_buckets,
-                    )
-                obs_hs = Observation()
-                nb = self._frontier_nb()
-                hb = F.pmod(F.xxhash64(F.col("host")), F.lit(nb)).cast("int")
-                hs_updates = hs_updates.observe(
-                    obs_hs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.count_if(
-                        (F.col("next_allowed_wave") == 0) & (F.col("cursor") == -1)
-                    ).alias("fresh"),
-                    *[
-                        F.min(F.when(hb == i, F.col("cursor"))).alias(f"m{i}")
-                        for i in range(nb)
-                    ],
-                ).localCheckpoint(True, self._ckpt_level)
-                got = observed_metrics(obs_hs)
-                # incremental host count: fresh rows are the only inserts
-                # (fetched hosts are pre-registered by the frontier
-                # invariant); minima MERGE keeps the cache a safe lower
-                # bound in both write regimes — the compaction cadence
-                # refreshes it exactly
-                self.n_hosts += int(got.get("fresh") or 0)
-                cache = dict(self._mins_cache or {})
-                for i in range(nb):
-                    m = got.get(f"m{i}")
-                    if m is not None:
-                        cache[i] = min(cache[i], m) if i in cache else m
-                self._mins_cache = cache
-                if fut_frontier is not None:
-                    frontier_manifest = fut_frontier.result()
-                crit.shutdown(wait=True)
-                self._pending_frontier_m = frontier_manifest
-                self._pending_hs_delta = hs_updates
-            # the composition base must be the COMMITTED table (the tail of
-            # the previous wave has been joined above, so HEAD is current —
-            # the select-phase `host_state` view may carry the pending
-            # delta overlay and must not be the base here)
-            hs_base = self.read_host_state()
-            if hs_base is not None:
-                hs = hs_base.join(
-                    hs_updates.select("host"), on="host", how="left_anti"
-                ).unionByName(hs_updates)
-            else:
-                hs = hs_updates
-            # bloom maintenance is independent of the table writes — run it
-            # in the commit pool; with the early split, report/seen carry
-            # only the ADMIT halves (settled halves already written)
-            if early is not None:
-                commit_report, commit_seen = admit_report, admit_seen
-                extra_jobs = None
-            else:
-                commit_report = report_rows.unionByName(admit_report)
-                commit_seen = seen_updates.unionByName(admit_seen)
-                extra_jobs = {"crawl_log": lambda: wh.append("crawl_log", log_rows)}
-            if pipelined:
-                from concurrent.futures import ThreadPoolExecutor
-
-                tail = ThreadPoolExecutor(max_workers=1)
-                self._tail_frees = [verified, new_frontier] + (
-                    [prev_delta] if prev_delta is not None else []
+                total_fetched += sel.batch_count
+                adm = self._admit(sel)
+                manifests, host_updates = self._commit_critical(
+                    adm.frontier, adm.n_frontier, adm.host_updates
                 )
-                self._tail_future = tail.submit(
-                    self._commit_wave,
-                    wave, None, commit_report, commit_seen, hs, batch_count,
-                    counts,
-                    n_frontier=n_frontier,
-                    avg_load_ms=stats.get("avg_load_ms"),
-                    extra_jobs=extra_jobs,
-                    filters_prep=lambda: self._ingest_filters(admit_seen),
-                    early=early,
-                    host_updates=hs_updates,
-                    frontier_manifest=frontier_manifest,
-                    hs_prestats=True,
+                self._commit_tail(
+                    [sel.verified, adm.frontier], wave, manifests,
+                    sel.report_rows.unionByName(adm.report),
+                    sel.seen_updates.unionByName(adm.seen), adm.seen,
+                    host_updates, sel.batch_count, adm.counts,
+                    avg_load_ms=sel.stats.get("avg_load_ms"),
+                    crawl_log=sel.log_rows,
                 )
-                tail.shutdown(wait=False)
-            else:
-                self._commit_wave(
-                    wave, new_frontier, commit_report, commit_seen, hs,
-                    batch_count, counts,
-                    n_frontier=n_frontier,
-                    avg_load_ms=stats.get("avg_load_ms"),
-                    extra_jobs=extra_jobs,
-                    filters_prep=lambda: self._ingest_filters(admit_seen),
-                    early=early,
-                    host_updates=hs_updates,
-                )
-            _mark("commit")
-            if cfg.compact_every and (wave + 1) % cfg.compact_every == 0:
-                # periodic LSM compaction; its own atomic commit. It reads
-                # and commits at HEAD, so the pipelined tail must have
-                # published this wave first (a compaction wave forfeits the
-                # overlap — 1 in compact_every waves).
-                self._wait_tail()
-                # the pipelined merge rule keeps the minima cache a safe
-                # LOWER bound in the flat-overwrite regime too (it can no
-                # longer rise with the full-table Observation) — recompute
-                # exactly here so frontier pruning stays tight
-                if not wh.num_buckets("host_state"):
-                    self._mins_cache = None
-                cm = {}
-                m1 = wh.compact_bucketed(
-                    "seen", version_col="wave", prefer_nonnull="status_code",
-                    max_files_per_bucket=cfg.compact_max_files,
-                )
-                if m1:
-                    cm["seen"] = m1
-                m2 = wh.compact_bucketed(
-                    "report", version_col="wave",
-                    max_files_per_bucket=cfg.compact_max_files,
-                )
-                if m2:
-                    cm["report"] = m2
-                if wh.num_buckets("host_state"):
-                    # LSM host_state: bound read amplification, then refresh
-                    # the cursor-minima cache EXACTLY — the per-wave merge
-                    # rule (min with changed buckets) can only tighten
-                    # downward, so this is where stale minima catch up after
-                    # the previous min host of a bucket advances
-                    m4 = wh.compact_bucketed(
-                        "host_state", version_col="wave",
-                        max_files_per_bucket=cfg.compact_max_files,
-                    )
-                    if m4:
-                        cm["host_state"] = m4
-                    self._mins_cache = None
-                    self._cursor_mins(self.read_host_state())
-                # frontier "compaction" is a manifest edit: (range, host-
-                # bucket) leaves entirely below their bucket's min cursor
-                # are dropped with zero IO
-                mins = self._cursor_mins(self.read_host_state())
-                if mins is not None:
-                    m3 = wh.prune_ranged("frontier", bucket_mins=mins)
-                    if m3:
-                        cm["frontier"] = m3
-                if cm:
-                    wh.commit(wave, cm, metrics={"counter": self.counter,
-                                                 "live": self.live,
-                                                 "n_hosts": self.n_hosts,
-                                                 "compaction": True})
-            # wave committed (or committing in the tail): the two wave
-            # checkpoints (select+verify batch, ranked admissions) die with
-            # the commit — freed here in the synchronous order, or by
-            # _wait_tail once the tail's writes are done reading them
-            # (block-manager hygiene; see free_local_checkpoint)
-            if not pipelined:
-                free_local_checkpoint(verified)
-                free_local_checkpoint(new_frontier)
-            if self.verbose:
-                print(
-                    f"[helix-spark] wave {wave}: batch={batch_count} "
-                    f"admitted={sum(counts.values())} {time.time() - t_wave:.1f}s "
-                    f"phases={phase_t}",
-                    flush=True,
-                )
+                if cfg.compact_every and (wave + 1) % cfg.compact_every == 0:
+                    self._compact(wave)
             wave += 1
-
         return CrawlOutcome(wave, self.aborted, total_fetched)
+
+    def _start(self, resume: bool) -> int:
+        """Resume from HEAD, or admit and commit the seeds. → first wave."""
+        head = self.wh.head_commit() if resume else None
+        if head:
+            self._restore_counters(head)
+            self._load_filters()
+            return head["wave"] + 1
+        self._init_filters()
+        seeds = self.spark.createDataFrame(
+            [
+                (s, s, None, None, True, 0, None, None, True, 0, i)
+                for i, s in enumerate(self.cfg.seeds)
+            ],
+            ADMIT_SCHEMA,
+        )
+        self._commit_admission(-1, *self.admit(seeds, wave=0))
+        return 0
+
+    def _select(self, wave: int) -> _Selection | None:
+        """Select phase: politeness select + verify as ONE lazy checkpoint,
+        materialized by the tiny wave-stats agg job (batch count, seed
+        redirects, avg load, rank-bucket boundary quantiles) submitted to
+        the pool. While the cluster runs that job the driver joins the
+        previous wave's tail and builds the entire admit tree (admissions →
+        enrichment → first-wins dedup → seen anti-join) — the wave's only
+        idle-cluster driver window otherwise (guide §2.6; measured
+        0.6-0.9 s/wave at the bench config). → None when there is no
+        frontier table."""
+        cfg, wh = self.cfg, self.wh
+        # the previous wave's tail may not have published yet — read the
+        # frontier through the pending manifest (written on that wave's
+        # critical path) and overlay host_state with the pending delta
+        # checkpoint; both reads are exact whether or not the tail has
+        # since committed
+        pend_f = self._pending_frontier_m
+        host_state = self._compose_hs(self.read_host_state())
+        mins = self._cursor_mins(host_state)
+        frontier = wh.read_ranged("frontier", bucket_mins=mins,
+                                  manifest_file=pend_f)
+        if frontier is None:
+            return None
+        # the select join only needs host rows that can match a live
+        # frontier row; host_state shares the frontier's host-bucket
+        # spec once LSM, so fully-consumed buckets drop off BOTH scans
+        # from the manifests alone (10^9-host posture: the politeness
+        # read is O(live-bucket hosts), not O(all hosts))
+        hs_select = host_state
+        if wh.num_buckets("host_state") == self._frontier_nb():
+            live_hbs = wh.ranged_live_buckets("frontier", bucket_mins=mins,
+                                              manifest_file=pend_f)
+            if live_hbs is not None:
+                hs_select = self._compose_hs(
+                    self.read_host_state(buckets=live_hbs)
+                )
+        self._set_shuffle_fanout(self.live)
+        batch = select_batch(
+            frontier, hs_select, wave, cfg.per_host_budget, cfg.salt_partitions,
+            # map-split estimate straight off the manifest: keeps the
+            # wave loop free of per-wave plan→RDD conversions
+            input_splits=wh.ranged_leaf_count("frontier", bucket_mins=mins,
+                                              manifest_file=pend_f),
+            # size-aware: broadcasting host_state dies past the driver
+            # ceiling at web-scale host counts — switch to shuffle-hash
+            broadcast_state=self.n_hosts <= cfg.host_state_broadcast_max_rows,
+        )
+        verified = verify_batch(batch, self.pages_store)
+
+        final_host = F.regexp_extract(F.col("final_url"), _HOST_RE, 1)
+        verified = self._with_is_seed(verified, F.col("url"), "__seed_url")
+        verified = self._with_is_seed(verified, F.col("final_url"), "__seed_final")
+        recompute = (
+            F.col("is_extracted")
+            & (F.col("status_pre") == 0)
+            & ~F.col("__seed_url")
+        )
+        verified = verified.withColumn(
+            "is_internal_final",
+            F.when(
+                recompute,
+                self._scope_expr(F.col("__seed_final"), final_host, F.col("parent_host")),
+            ).otherwise(F.col("is_internal")),
+        )
+        # The boundary quantiles are over the fetched pages' priorities,
+        # which is the parent_priority distribution of this wave's
+        # admissions up to out-degree weighting; rank correctness is
+        # boundary-independent (operators/rank.py), boundaries only balance
+        # the rank buckets.
+        stat_cols = [
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(
+                F.col("redirected") & F.col("__seed_url")
+            ).alias("seed_redirects"),
+            # avg page-load time over this wave's settled fetches
+            # (README.md:28-29 / StatisticsSnapshot.cs:7 analog)
+            F.avg(F.when(~F.col("redirected"), F.col("load_ms"))).alias("avg_load_ms"),
+            F.percentile_approx(
+                F.col("priority"),
+                [i / self._rank_buckets for i in range(1, self._rank_buckets)],
+                1000,
+            ).alias("rank_bounds"),
+        ]
+        if os.environ.get("HELIX_SPARK_PLAN_LOG"):
+            from helix_spark.operators.rank import PLAN_LOG
+
+            PLAN_LOG.append(
+                "select:" + verified._jdf.queryExecution().executedPlan().toString()
+            )
+        verified = verified.localCheckpoint(False, _CKPT_LEVEL)
+        stats_fut = self._pool.submit(
+            lambda: verified.agg(*stat_cols).collect()[0]
+        )
+        # previous wave's tail: join it BEFORE anything reads HEAD (the
+        # admit tree build below embeds the seen table at HEAD). The select
+        # job may still be running — the tail's jobs were overlapped with
+        # it anyway, and nothing the tail frees is an input of the running
+        # job (the select reads the pending frontier manifest from parquet
+        # and the still-pending hs delta, which _wait_tail defers to the
+        # NEXT tail's frees).
+        self._wait_tail()
+        # every select_batch column survives verify_batch: the verified
+        # checkpoint stands in for the batch here and in host_state_updates
+        log_rows = verified.select(F.lit(wave).alias("wave"), "priority", "url")
+
+        redirected = verified.filter(F.col("redirected"))
+        settled = verified.filter(~F.col("redirected"))
+        report_rows = settled.select(
+            F.col("final_url").alias("verified_url"),
+            F.col("parent_url"),
+            F.col("is_internal_final").alias("is_internal"),
+            F.col("resource_type"),
+            F.col("status_code"),
+        )
+        seen_updates = settled.select(
+            F.col("final_hash").alias("key_hash"),
+            F.col("final_url").alias("key"),
+            F.col("status_code"),
+            F.lit(wave).alias("wave"),
+        )
+        renderable = settled.filter(
+            F.col("is_internal_final")
+            & ~is_broken_col(F.col("status_code"))
+            & (F.coalesce(F.col("size"), F.lit(0)) <= cfg.max_renderable_size)
+            & F.col("resource_type").isin(*RENDERABLE_TYPES)
+            & F.col("is_extracted")
+            & (F.col("status_pre") == 0)
+        )
+        admissions = self._collect_admissions(renderable, redirected)
+        # join-strategy estimate = prev wave's observed candidates ×4,
+        # CLAMPED from below by a driver-known UPPER BOUND on this wave's
+        # batch count (the exact count is still in flight) × the max
+        # out-degree ever observed (×2 headroom): a batch-size spike — the
+        # common way "prev wave ×4" underestimates — can never route an
+        # over-limit candidate set into the broadcast-semi path (driver OOM
+        # risk, round-3 ADVICE). batch ≤ live rows and ≤ one budget per
+        # registered host, so the bound only OVERestimates — which can only
+        # flip the seen-join strategy toward the conservative shuffle-anti /
+        # bloom-bypass side (operators/dedup.anti_join_seen thresholds).
+        est = self._est_candidates
+        if est is not None and self._max_out_degree:
+            batch_bound = self.live
+            if self.n_hosts:
+                batch_bound = min(
+                    batch_bound, self.n_hosts * cfg.per_host_budget
+                )
+            est = max(est, batch_bound * self._max_out_degree * 2)
+        fresh = self._admit_prepare(admissions, est_candidates=est)
+        stats = stats_fut.result().asDict()
+        return _Selection(wave, verified, stats, report_rows, seen_updates,
+                          log_rows, fresh)
+
+    def _abort(self, sel: _Selection, total_fetched: int) -> CrawlOutcome:
+        """A redirect at a seed aborts the crawl (CoordinatorBlock.cs:215-226).
+        The oracle logs fetches one-by-one in priority order and stops AT
+        the redirecting seed — truncate the batch log to match."""
+        self.aborted = True
+        abort_pri = sel.verified.filter(
+            F.col("redirected") & F.col("__seed_url")
+        ).agg(F.min("priority").alias("p")).collect()[0]["p"]
+        log_rows = sel.log_rows.filter(F.col("priority") <= abort_pri)
+        total_fetched += log_rows.count()
+        mlog = self.wh.append("crawl_log", log_rows)
+        self.wh.commit(sel.wave, {"crawl_log": mlog},
+                       metrics={"counter": self.counter, "live": self.live,
+                                "aborted": True})
+        return CrawlOutcome(sel.wave + 1, True, total_fetched)
+
+    def _admit(self, sel: _Selection) -> _Admission:
+        """Admit phase: the rank job over the admit tree built during the
+        select, then the wave's changed host_state rows."""
+        batch_count = sel.batch_count
+        nb_hs = self.wh.num_buckets("host_state")
+        # admissions ≈ batch × out-degree: re-size the admit job's fanout
+        # (a conf read at ACTION time — the admit tree was built under the
+        # select job, but its physical planning happens at the rank-job
+        # submission below)
+        self._set_shuffle_fanout(batch_count * 4)
+        frontier, report, seen, counts, n_frontier, new_hbs = self._admit_finish(
+            sel.fresh, sel.wave + 1,
+            boundaries=sel.stats.get("rank_bounds"),
+            host_bucket_mod=nb_hs or None,
+        )
+        # next wave's join-strategy estimate: waves are self-similar, and
+        # post-dedup candidates exceed post-anti admissions — pad 4× so
+        # the semi-broadcast path only engages well inside its regime
+        cands = sum(counts.values())
+        self._max_out_degree = max(
+            self._max_out_degree, -(-cands // max(batch_count, 1))
+        )
+        self._est_candidates = max(cands, batch_count) * 4
+        self.counter += cands
+        self.live += n_frontier - batch_count
+        # changed host rows only (fetched + genuinely new). The already-
+        # registered anti-join only needs host_state rows that could MATCH
+        # a new host — in the LSM regime the raw read is pruned to the
+        # buckets the new hosts hash into (host equality cannot match
+        # across buckets), so the per-wave scan is O(new-host buckets'
+        # rows), not O(all appended rows) between compactions (round-5
+        # ADVICE; the 10^9-host posture the politeness docstring promises).
+        # The bucket ids RIDE the admit rank's per-bucket counts job
+        # (_admit_finish host_bucket_mod) — no separate distinct job on the
+        # commit critical path.
+        host_updates = host_state_updates(
+            sel.verified, self.robots, sel.wave,
+            self.read_host_state(buckets=new_hbs, resolve=False),
+            new_hosts=frontier,
+        )
+        return _Admission(frontier, report, seen, counts, n_frontier,
+                          host_updates)
+
+    def _compact(self, wave: int) -> None:
+        """Periodic LSM compaction; its own atomic commit. It reads and
+        commits at HEAD, so the wave's tail must have published first (a
+        compaction wave forfeits the overlap — 1 in compact_every waves)."""
+        cfg, wh = self.cfg, self.wh
+        self._wait_tail()
+        # the per-wave merge rule keeps the minima cache a safe LOWER bound
+        # in the flat-overwrite regime too (it can only tighten downward) —
+        # recompute exactly here so frontier pruning stays tight
+        if not wh.num_buckets("host_state"):
+            self._mins_cache = None
+        cm = {}
+        m1 = wh.compact_bucketed(
+            "seen", version_col="wave", prefer_nonnull="status_code",
+            max_files_per_bucket=cfg.compact_max_files,
+        )
+        if m1:
+            cm["seen"] = m1
+        m2 = wh.compact_bucketed(
+            "report", version_col="wave",
+            max_files_per_bucket=cfg.compact_max_files,
+        )
+        if m2:
+            cm["report"] = m2
+        if wh.num_buckets("host_state"):
+            # LSM host_state: bound read amplification, then refresh the
+            # cursor-minima cache EXACTLY — the per-wave merge rule (min
+            # with changed buckets) can only tighten downward, so this is
+            # where stale minima catch up after the previous min host of a
+            # bucket advances
+            m4 = wh.compact_bucketed(
+                "host_state", version_col="wave",
+                max_files_per_bucket=cfg.compact_max_files,
+            )
+            if m4:
+                cm["host_state"] = m4
+            self._mins_cache = None
+            self._cursor_mins(self.read_host_state())
+        # frontier "compaction" is a manifest edit: (range, host-bucket)
+        # leaves entirely below their bucket's min cursor are dropped with
+        # zero IO
+        mins = self._cursor_mins(self.read_host_state())
+        if mins is not None:
+            m3 = wh.prune_ranged("frontier", bucket_mins=mins)
+            if m3:
+                cm["frontier"] = m3
+        if cm:
+            wh.commit(wave, cm, metrics={"counter": self.counter,
+                                         "live": self.live,
+                                         "n_hosts": self.n_hosts,
+                                         "compaction": True})
 
     def _ingest_filters(self, admit_seen: DataFrame) -> None:
         """bloom: every new seen key, built executor-side per slice (numpy,
@@ -1709,73 +1480,89 @@ class CrawlEngine:
             F.count_if(F.abs(F.col("status_code")) >= 400).alias("broken"),
         ]
 
-    def _commit_wave(self, wave, frontier, report, seen, host_state, batch_count,
-                     partition_counts=None, extra_manifests: dict | None = None,
-                     n_frontier: int | None = None,
-                     avg_load_ms: float | None = None,
-                     extra_jobs: dict | None = None,
-                     filters_prep=None, early: dict | None = None,
-                     host_updates=None, frontier_manifest: str | None = None,
-                     hs_prestats: bool = False) -> None:
-        """``extra_jobs``: {table: thunk → manifest} to run in the commit
-        pool alongside the table writes. ``filters_prep``: thunk run in the
-        pool BEFORE _save_filters on the same pool task (bloom ingest must
-        complete before its serialization — sequential within the task,
-        concurrent with everything else). ``early``: the wave loop's
-        already-submitted settled-half writes (futures 'report'/'seen',
-        pre-resolved table futures in 'manifests', the settled report
-        write's Observation in 'obs_report' for the metrics sum, and the
-        owning 'pool'); when present, ``report``/``seen`` carry ONLY the
-        admit halves and chain onto the early manifests.
+    def _commit_critical(self, frontier, n_frontier, host_updates):
+        """Critical-path half of a commit — only what the NEXT select reads:
+        the frontier append (run in the pool, concurrently) and the
+        host-updates checkpoint, whose Observation carries the fresh-host
+        count and the per-bucket cursor minima so the driver stats are
+        current before the tail even starts. Both stay the pending state
+        the next select reads until the tail publishes.
 
-        Pipelined-commit mode (plans/crawl._run steady wave):
-        ``frontier_manifest`` links an ALREADY-WRITTEN frontier append
-        (done on the wave's critical path so the next select can read it)
-        instead of submitting the job here; ``hs_prestats`` marks that the
-        cursor-minima/fresh-host Observation already rode the
-        ``host_updates`` checkpoint and the driver stats are current — the
-        host_state write runs bare and ``jobs_after`` is skipped."""
+        → (manifests of the appended frontier, checkpointed host updates or
+        None)"""
         wh, cfg = self.wh, self.cfg
-        manifests = dict(extra_manifests or {})
-        if frontier_manifest is not None:
-            manifests["frontier"] = frontier_manifest
-        # The table writes below are independent jobs over already-
-        # checkpointed inputs — submit them concurrently so the scheduler
-        # interleaves their tasks (sequential writes leave most cores idle
-        # between jobs; measured as the commit phase anti-scaling at 32
-        # threads). Each writes its own table dir + manifest file, no shared
-        # state; the atomic commit happens once, after all complete.
-        from concurrent.futures import ThreadPoolExecutor
-
-        jobs: dict[str, object] = {}
-        # headroom over the task count: the metrics task BLOCKS on the report
-        # task's future, so the pool must never be saturated by waiters
-        pool = ThreadPoolExecutor(max_workers=8)
-        durations: dict[str, float] = {}
-        if self.verbose:
-            _orig_submit = pool.submit
-
-            def _timed_submit(fn, *a, _submit=_orig_submit, **kw):
-                def run():
-                    t0 = time.time()
-                    try:
-                        return fn(*a, **kw)
-                    finally:
-                        run.dt = time.time() - t0
-
-                fut = _submit(run)
-                fut._timer = run
-                return fut
-
-            pool.submit = _timed_submit
-        if frontier_manifest is None and (n_frontier is None or n_frontier > 0):
+        fut_frontier = None
+        if n_frontier > 0:
             # append-only ranged LSM: O(new rows); consumed rows are encoded
             # by host_state cursors, fully-dead ranges pruned at compaction
-            jobs["frontier"] = pool.submit(
+            fut_frontier = self._pool.submit(
                 wh.append_ranged, "frontier", frontier.select(FRONTIER_COLS),
                 "priority", cfg.frontier_range_bits, "host",
                 cfg.frontier_host_buckets,
             )
+        if host_updates is not None:
+            obs = Observation()
+            nb = self._frontier_nb()
+            hb = F.pmod(F.xxhash64(F.col("host")), F.lit(nb)).cast("int")
+            host_updates = host_updates.observe(
+                obs,
+                F.count_if(
+                    (F.col("next_allowed_wave") == 0) & (F.col("cursor") == -1)
+                ).alias("fresh"),
+                *[
+                    F.min(F.when(hb == i, F.col("cursor"))).alias(f"m{i}")
+                    for i in range(nb)
+                ],
+            ).localCheckpoint(True, _CKPT_LEVEL)
+            got = observed_metrics(obs)
+            # incremental host count: fresh rows are the only inserts
+            # (fetched hosts are pre-registered by the frontier invariant).
+            # min() MERGE keeps the cache a safe lower bound; it cannot rise
+            # when a bucket's min host advances, so the compaction cadence
+            # refreshes it exactly
+            self.n_hosts += int(got.get("fresh") or 0)
+            cache = dict(self._mins_cache or {})
+            for i in range(nb):
+                m = got.get(f"m{i}")
+                if m is not None:
+                    cache[i] = min(cache[i], m) if i in cache else m
+            self._mins_cache = cache
+        manifests = {}
+        if fut_frontier is not None:
+            manifests["frontier"] = fut_frontier.result()
+        self._pending_frontier_m = manifests.get("frontier")
+        self._pending_hs_delta = host_updates
+        return manifests, host_updates
+
+    def _commit_tail(self, frees: list, *commit_args, **commit_kw) -> None:
+        """Start the background half of a commit: ``_commit_wave(
+        *commit_args, **commit_kw)`` in the pool, overlapped with the next
+        select and joined by _wait_tail. ``frees``: the checkpoints its
+        writes read, freed once it is joined (block-manager hygiene; see
+        free_local_checkpoint) — with the previous commit's host-updates
+        delta, which the select that just ran may have read."""
+        prev_delta, self._delta_to_free = self._delta_to_free, None
+        self._tail_frees = frees + ([prev_delta] if prev_delta is not None else [])
+        self._tail_future = self._pool.submit(
+            self._commit_wave, *commit_args, **commit_kw
+        )
+
+    def _commit_wave(self, wave, manifests, report, seen, new_seen,
+                     host_updates, batch_count, partition_counts,
+                     avg_load_ms: float | None = None,
+                     crawl_log: DataFrame | None = None) -> None:
+        """The commit tail (runs in the pool): every table write off the
+        critical path, then ONE atomic commit of their manifests plus
+        ``manifests`` (the critical path's frontier append). ``new_seen``:
+        the newly admitted subset of ``seen``, ingested into the bloom
+        before the filter is saved.
+
+        The writes are independent jobs over already-checkpointed inputs —
+        submitted concurrently so the scheduler interleaves their tasks
+        (sequential writes leave most cores idle between jobs; measured as
+        the commit phase anti-scaling at 32 threads). Each writes its own
+        table dir + manifest file, no shared state."""
+        wh, cfg, pool = self.wh, self.cfg, self._pool
         # seen/report are LSM append-only (O(new rows) per wave, bucket-pruned
         # reads): hash-uniform updates would touch every bucket of a
         # copy-on-write merge, degenerating to an O(table) rewrite per wave.
@@ -1790,126 +1577,31 @@ class CrawlEngine:
         # RIDE the report write as an Observation — the old standalone agg
         # re-scanned every report row a second time (a measured ~6-12 s pool
         # job per wave at bench scale, pure waste)
-        obs_admit = Observation()
+        obs_report = Observation()
         wave_report = report.withColumn("wave", F.lit(wave)).observe(
-            obs_admit, *self._report_metric_cols()
+            obs_report, *self._report_metric_cols()
         )
-        if early is not None:
-            rb, sb = early["report"], early["seen"]
-            jobs["report"] = pool.submit(
-                lambda: wh.append_bucketed(
-                    "report", wave_report, "verified_url", cfg.report_buckets,
-                    base_manifest=rb.result(),
-                )
-            )
-            jobs["seen"] = pool.submit(
-                lambda: wh.append_bucketed(
-                    "seen", seen, "key", cfg.seen_buckets,
-                    base_manifest=sb.result(),
-                )
-            )
-        else:
-            jobs["report"] = pool.submit(
-                wh.append_bucketed, "report", wave_report, "verified_url", cfg.report_buckets
-            )
-            jobs["seen"] = pool.submit(
+        jobs = {
+            "report": pool.submit(
+                wh.append_bucketed, "report", wave_report, "verified_url",
+                cfg.report_buckets,
+            ),
+            "seen": pool.submit(
                 wh.append_bucketed, "seen", seen, "key", cfg.seen_buckets
+            ),
+        }
+        if host_updates is not None:
+            jobs["host_state"] = pool.submit(
+                self._write_host_state, wave, host_updates
             )
-        if host_state is not None:
-            obs_hosts = Observation()
-            nb = self._frontier_nb()
-            hb = F.pmod(F.xxhash64(F.col("host")), F.lit(nb)).cast("int")
-            min_cols = [
-                F.min(F.when(hb == i, F.col("cursor"))).alias(f"m{i}")
-                for i in range(nb)
-            ] if not hs_prestats else []
-            hs_bucketed = wh.num_buckets("host_state") > 0
-            # LSM once past the threshold (and permanently once the table is
-            # bucketed): per-wave write is O(changed hosts), not O(all
-            # hosts). A full overwrite at 10^8-10^9 hosts would be the one
-            # remaining O(state)-per-wave write in an otherwise LSM design.
-            lsm = hs_bucketed or (
-                host_updates is not None
-                and self.n_hosts > cfg.host_state_lsm_min_hosts
-            )
-            if lsm and hs_bucketed and host_updates is not None:
-                # steady state: append ONLY the changed rows; the per-bucket
-                # cursor minima + fresh-host count ride the tiny write
-                # (unless they already rode the critical-path checkpoint —
-                # hs_prestats — in which case the write runs bare)
-                upd = host_updates.withColumn("wave", F.lit(wave))
-                if not hs_prestats:
-                    upd = upd.observe(
-                        obs_hosts,
-                        F.count(F.lit(1)).alias("n"),
-                        F.count_if(
-                            (F.col("next_allowed_wave") == 0) & (F.col("cursor") == -1)
-                        ).alias("fresh"),
-                        *min_cols,
-                    )
-                nb_hs = wh.num_buckets("host_state")
-                jobs["host_state"] = pool.submit(
-                    wh.append_bucketed, "host_state", upd, "host", nb_hs
-                )
-                hs_mode = "lsm"
-            else:
-                # small-scale overwrite, or the ONE-TIME O(table) migration
-                # into the bucketed LSM layout at the threshold crossing
-                # (bucket modulus = the frontier's, so host-bucket pruning
-                # aligns across the two tables)
-                full = host_state if hs_prestats else host_state.observe(
-                    obs_hosts, F.count(F.lit(1)).alias("n"), *min_cols
-                )
-                if lsm:
-                    jobs["host_state"] = pool.submit(
-                        wh.overwrite_bucketed, "host_state",
-                        full.withColumn("wave", F.lit(wave)), "host", nb,
-                    )
-                else:
-                    jobs["host_state"] = pool.submit(wh.overwrite, "host_state", full)
-                hs_mode = "full"
-
-            def _update_host_stats():
-                jobs["host_state"].result()
-                got = observed_metrics(obs_hosts)
-                if hs_mode == "lsm":
-                    # the write saw CHANGED rows only: count inserts exactly
-                    # (fresh rows are the only inserts — fetched hosts are
-                    # always pre-registered by the frontier invariant) and
-                    # MERGE the changed buckets' minima into the cache.
-                    # min() keeps the cache a safe lower bound; it cannot
-                    # rise when the previous min host advances, so the
-                    # compaction cadence refreshes it exactly.
-                    self.n_hosts += int(got.get("fresh") or 0)
-                    cache = dict(self._mins_cache or {})
-                    for i in range(nb):
-                        m = got.get(f"m{i}")
-                        if m is not None:
-                            cache[i] = min(cache[i], m) if i in cache else m
-                    self._mins_cache = cache
-                else:
-                    self.n_hosts = int(got.get("n") or 0)
-                    self._mins_cache = {
-                        i: got[f"m{i}"]
-                        for i in range(nb)
-                        if got.get(f"m{i}") is not None
-                    }
-
-            jobs_after = None if hs_prestats else _update_host_stats
-        else:
-            jobs_after = None
 
         def _metrics_row():
-            # waits for the report write(s), then sums their observations —
-            # one 1-row write instead of a full re-aggregation job
+            # waits for the report write, then reads its observation — one
+            # 1-row write instead of a full re-aggregation job
             jobs["report"].result()
-            got = observed_metrics(obs_admit)
+            got = observed_metrics(obs_report)
             n = got.get("n") or 0
             broken = got.get("broken") or 0
-            if early is not None:
-                got_s = observed_metrics(early["obs_report"])
-                n += got_s.get("n") or 0
-                broken += got_s.get("broken") or 0
             row_df = self.spark.createDataFrame(
                 [(wave, n, broken, n - broken, batch_count,
                   float(avg_load_ms) if avg_load_ms is not None else None)],
@@ -1919,34 +1611,22 @@ class CrawlEngine:
             return wh.append("metrics", row_df)
 
         jobs["metrics"] = pool.submit(_metrics_row)
-        for tname, thunk in (extra_jobs or {}).items():
-            jobs[tname] = pool.submit(thunk)
+        if crawl_log is not None:
+            jobs["crawl_log"] = pool.submit(wh.append, "crawl_log", crawl_log)
 
-        def _filters_chain():
-            if filters_prep is not None:
-                filters_prep()
+        def _filters():
+            # bloom ingest must complete before its serialization —
+            # sequential within this task, concurrent with the writes
+            self._ingest_filters(new_seen)
             return self._save_filters(wave)
 
-        filters_future = pool.submit(_filters_chain)
-        try:
-            for name, fut in jobs.items():
-                manifests[name] = fut.result()
-                if self.verbose and hasattr(fut, "_timer"):
-                    durations[name] = round(getattr(fut._timer, "dt", -1), 1)
-            for name, fut in (early or {}).get("manifests", {}).items():
-                manifests[name] = fut.result()
-            manifests.update(filters_future.result())
-            if self.verbose and hasattr(filters_future, "_timer"):
-                durations["filters"] = round(
-                    getattr(filters_future._timer, "dt", -1), 1)
-        finally:
-            pool.shutdown(wait=True)
-            if early is not None:
-                early["pool"].shutdown(wait=True)
-        if jobs_after is not None:
-            jobs_after()
-        if self.verbose:
-            print(f"[helix-spark]     commit jobs: {durations}", flush=True)
+        filters = pool.submit(_filters)
+        # every write finishes before a failure propagates: once the tail
+        # is joined, nothing of the unpublished wave is still being written
+        wait([*jobs.values(), filters])
+        for name, fut in jobs.items():
+            manifests[name] = fut.result()
+        manifests.update(filters.result())
         wh.commit(
             wave,
             manifests,
@@ -1958,3 +1638,36 @@ class CrawlEngine:
                 "admit_partition_rows": {str(k): v for k, v in (partition_counts or {}).items()},
             },
         )
+
+    def _write_host_state(self, wave: int, host_updates: DataFrame) -> str:
+        """host_state write. Bucketed (LSM) table: append ONLY the changed
+        rows, versioned by ``wave`` — O(changed hosts) per wave. Flat table:
+        overwrite with the committed table composed with the updates — one
+        tiny file at small scale; once n_hosts passes
+        cfg.host_state_lsm_min_hosts, that overwrite is the ONE-TIME
+        migration into the bucketed layout (bucket modulus = the
+        frontier's, so host-bucket pruning aligns across the two tables).
+        A full overwrite at 10^8-10^9 hosts would be the one remaining
+        O(state)-per-wave write in an otherwise LSM design."""
+        wh = self.wh
+        nb = wh.num_buckets("host_state")
+        if nb:
+            return wh.append_bucketed(
+                "host_state", host_updates.withColumn("wave", F.lit(wave)),
+                "host", nb,
+            )
+        # the composition base is the COMMITTED table: the previous tail
+        # has published, so HEAD is current (the select-phase view may
+        # carry the pending delta overlay and must not be the base)
+        base = self.read_host_state()
+        full = host_updates
+        if base is not None:
+            full = base.join(
+                host_updates.select("host"), on="host", how="left_anti"
+            ).unionByName(host_updates)
+        if self.n_hosts > self.cfg.host_state_lsm_min_hosts:
+            return wh.overwrite_bucketed(
+                "host_state", full.withColumn("wave", F.lit(wave)), "host",
+                self._frontier_nb(),
+            )
+        return wh.overwrite("host_state", full)

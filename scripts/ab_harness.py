@@ -1,7 +1,7 @@
 """Shared paired-A/B machinery (round-5 VERDICT #7): alternating fresh-JVM
 legs, one-JSON-line-per-leg parsing, per-leg CPU-steal share, and the
-best/median summary — the pieces crawl_ab.py / crawl_ab_r3.py /
-neardup_ab.py / scaling_bench.py each carried by copy.
+best/median summary — the pieces crawl_ab.py / neardup_ab.py /
+scaling_bench.py each carried by copy.
 
 Protocol: a "leg" is an argv list for a subprocess that prints exactly one
 line starting with ``{`` (its JSON record). Legs alternate across variants

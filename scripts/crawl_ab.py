@@ -6,7 +6,7 @@ invocation; the driver script below loops via subprocess).
 
 Variants (first CLI arg):
   base        — code as committed
-  no_early    — early-commit split disabled (threshold above any batch)
+  <name>      — base with the CFG_OVERRIDES[name] CrawlConfig fields set
   all         — run every variant in separate subprocesses, best-of-N each
 
 Usage: python scripts/crawl_ab.py all [n_samples]
@@ -20,40 +20,16 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-VARIANTS = ["base", "no_early"]
-
-# cfg-field overrides per variant (applied post-construction, same
-# patched-__init__ trick as no_early): lets any CrawlConfig knob be A/B'd
-# with alternating fresh-JVM legs, e.g. the round-6 fanout sizing.
-CFG_OVERRIDES = {
-    "f25k": {"fanout_rows_per_partition": 25_000},
-    "f4k": {"fanout_rows_per_partition": 4_000},
-    "f2k": {"fanout_rows_per_partition": 2_000},
-    # bench waves are ~44.7k rows — just under the 50k early-commit engage
-    # point; this variant asks whether the overlap pays there too
-    "early30k": {"early_commit_min_batch": 30_000},
-    # round-6: synchronous wave commit (the pre-pipelining order) vs the
-    # pipelined default
-    "sync_commit": {"pipelined_commit": False},
-    # round-6 extension: synchronous select stats (eager checkpoint + sync
-    # agg) vs the overlapped lazy-materialization default
-    "sync_select": {"overlap_select_build": False},
-}
-
-# env-var overrides per variant (set before the engine builds its session /
-# enters the wave loop) — for A/B hooks that live in _static_planner
-ENV_OVERRIDES = {
-    # round-6: re-enable Catalyst constraint propagation in the wave loop
-    # (the OLD behavior) to measure the driver-analysis saving of the new
-    # default-off
-    "cprop_on": {"HELIX_KEEP_CONSTRAINT_PROP": "1"},
-}
+# cfg-field overrides per variant (applied post-construction by patching
+# the engine's __init__ — dataclass defaults are captured at decoration
+# time): lets any CrawlConfig knob be A/B'd with alternating fresh-JVM legs,
+# e.g. {"rbpc1": {"rank_buckets_per_core": 1}}
+CFG_OVERRIDES: dict[str, dict] = {}
+VARIANTS = ["base", *CFG_OVERRIDES]
 
 
 def run_variant(variant: str) -> float:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    for k, v in ENV_OVERRIDES.get(variant, {}).items():
-        os.environ[k] = v
     import bench
     from helix_spark.plans import crawl as crawlmod
 
@@ -67,16 +43,6 @@ def run_variant(variant: str) -> float:
             orig_init(self, spark, cfg, *a, **kw)
 
         crawlmod.CrawlEngine.__init__ = patched_cfg
-    if variant == "no_early":
-        # dataclass defaults are captured at decoration time — patch the
-        # engine's entry so the cfg instance is mutated post-construction
-        orig_init = crawlmod.CrawlEngine.__init__
-
-        def patched(self, spark, cfg, *a, **kw):
-            cfg.early_commit_min_batch = 10**12
-            orig_init(self, spark, cfg, *a, **kw)
-
-        crawlmod.CrawlEngine.__init__ = patched
 
     from helix_spark.session import get_spark
 
@@ -95,7 +61,7 @@ def run_variant(variant: str) -> float:
 def main():
     # thin wrapper over scripts/ab_harness.py (alternating fresh-JVM legs,
     # steal% on every sample): `python scripts/crawl_ab.py all [n]` or any
-    # comma-list of variants, e.g. `python scripts/crawl_ab.py f25k,f4k 2`
+    # comma-list of variants, e.g. `python scripts/crawl_ab.py base,<name> 2`
     from ab_harness import alternate
 
     which = sys.argv[1] if len(sys.argv) > 1 else "all"

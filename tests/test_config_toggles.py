@@ -74,73 +74,6 @@ def test_metrics_table(spark, tmp_path):
     assert sum(m["broken_new"] for m in metrics) == total_broken
 
 
-def test_early_commit_split_parity(spark, tmp_path):
-    """The early-commit overlap (settled report/seen halves written DURING
-    the admit job, admit halves chained after — engaged past
-    early_commit_min_batch) must be invisible in results: force it ON for
-    every wave and require exact seen/report/metrics parity."""
-    from pyspark.sql import functions as F
-
-    N, H = 45, 5
-    pages_pd = synthetic.gen_pages_py(N, H)
-    assets_pd = synthetic.gen_assets_py(N, H, 16)
-    robots_pd = synthetic.gen_robots_py(H)
-    cfg = CrawlConfig(
-        seeds=["http://host0.test/p/0"], per_host_budget=3, max_waves=30,
-        expected_urls=5000, bloom_slices=4, seen_buckets=8, report_buckets=8,
-        early_commit_min_batch=0,  # every wave takes the split path
-        early_commit_min_parallelism=0,  # even on the local[4] test session
-    )
-    oracle = SerialOracle(cfg, pages_pd, assets_pd, robots_pd).run()
-    eng = CrawlEngine(
-        spark, cfg, str(tmp_path / "ec"),
-        spark.createDataFrame(pages_pd),
-        spark.createDataFrame(assets_pd),
-        spark.createDataFrame(robots_pd),
-    )
-    eng.run()
-    got_seen = {r["key"]: r["status_code"] for r in eng.read_seen().collect()}
-    assert got_seen == oracle.seen
-    got_rep = {r["verified_url"]: r["status_code"] for r in eng.read_report().collect()}
-    want_rep = {k: v["status_code"] for k, v in oracle.report.items()}
-    assert got_rep == want_rep
-    # metrics (summed from the two halves' observations) still reconcile
-    metrics = eng.wh.read("metrics").collect()
-    total_broken = eng.read_report().filter(F.abs(F.col("status_code")) >= 400).count()
-    assert sum(m["broken_new"] for m in metrics) == total_broken
-
-
-def test_serialized_checkpoint_parity(spark, tmp_path):
-    """wave_checkpoint_storage flips the wave loop's heavy localCheckpoints
-    (admit rank, verified batch) to SERIALIZED cached blocks — a pure
-    caching-format change that must be invisible in results: exact
-    seen/report/fetch-order parity with the serial oracle."""
-    N, H = 45, 5
-    pages_pd = synthetic.gen_pages_py(N, H)
-    assets_pd = synthetic.gen_assets_py(N, H, 16)
-    robots_pd = synthetic.gen_robots_py(H)
-    cfg = CrawlConfig(
-        seeds=["http://host0.test/p/0"], per_host_budget=3, max_waves=30,
-        expected_urls=5000, bloom_slices=4, seen_buckets=8, report_buckets=8,
-        wave_checkpoint_storage="MEMORY_AND_DISK",  # PySpark's = serialized
-    )
-    oracle = SerialOracle(cfg, pages_pd, assets_pd, robots_pd).run()
-    eng = CrawlEngine(
-        spark, cfg, str(tmp_path / "ser"),
-        spark.createDataFrame(pages_pd),
-        spark.createDataFrame(assets_pd),
-        spark.createDataFrame(robots_pd),
-    )
-    eng.run()
-    got_seen = {r["key"]: r["status_code"] for r in eng.read_seen().collect()}
-    assert got_seen == oracle.seen
-    got_rep = {r["verified_url"]: r["status_code"] for r in eng.read_report().collect()}
-    want_rep = {k: v["status_code"] for k, v in oracle.report.items()}
-    assert got_rep == want_rep
-    log = eng.wh.read("crawl_log").orderBy("wave", "priority").collect()
-    assert [(r["wave"], r["url"]) for r in log] == oracle.crawl_order
-
-
 def test_compaction_preserves_parity(spark, tmp_path):
     """LSM compaction mid-crawl must not change the resolved seen/report."""
     N, H = 45, 5

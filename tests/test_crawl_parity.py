@@ -11,6 +11,8 @@ seed list and politeness budget:
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,18 +22,21 @@ from helix_spark.plans.oracle import SerialOracle
 from helix_spark.sources import synthetic
 
 
-def _build_universe(spark, N=60, H=6):
+def _build_universe(spark, N=60, H=6, delay_hosts=()):
     pages_pd = synthetic.gen_pages_py(N, H)
     assets_pd = synthetic.gen_assets_py(N, H, n_images=16)
     robots_pd = synthetic.gen_robots_py(H)
+    robots_pd.loc[robots_pd["host"].isin(list(delay_hosts)), "crawl_delay_waves"] = 3
     pages = spark.createDataFrame(pages_pd)
     assets = spark.createDataFrame(assets_pd)
     robots = spark.createDataFrame(robots_pd)
     return pages_pd, assets_pd, robots_pd, pages, assets, robots
 
 
-def _run_both(spark, tmp_path, cfg, N=60, H=6):
-    pages_pd, assets_pd, robots_pd, pages, assets, robots = _build_universe(spark, N, H)
+def _run_both(spark, tmp_path, cfg, N=60, H=6, delay_hosts=()):
+    pages_pd, assets_pd, robots_pd, pages, assets, robots = _build_universe(
+        spark, N, H, delay_hosts
+    )
     oracle = SerialOracle(cfg, pages_pd, assets_pd, robots_pd).run()
     engine = CrawlEngine(spark, cfg, str(tmp_path / "wh"), pages, assets, robots)
     outcome = engine.run()
@@ -250,22 +255,41 @@ def test_parity_broadcast_seed_scope(spark, tmp_path):
     """seed_isin_max=0 forces the broadcast-join seed-membership path (the
     10^5-seed bootstrap strategy); results must stay bit-identical to the
     literal-isin path and the oracle — including orphan marking, scope
-    recompute after redirects, and seed-redirect handling."""
-    cfg = CrawlConfig(
-        seeds=["http://host0.test/p/0", "http://host1.test/p/1"],
-        per_host_budget=3,
-        max_waves=60,
-        expected_urls=10_000,
-        bloom_slices=4,
-        seen_buckets=8,
-        report_buckets=8,
-        seed_isin_max=0,
+    recompute after redirects, and seed-redirect handling. The second case
+    gives both seed hosts a 3-wave crawl delay, so the crawl passes through
+    waves where every queued host is delayed (an empty batch: a
+    logical-clock tick)."""
+    cases = [
+        (["http://host0.test/p/0", "http://host1.test/p/1"], ()),
+        (["http://host2.test/p/1", "http://host3.test/p/2"],
+         ("host2.test", "host3.test")),
+    ]
+    for i, (seeds, delay_hosts) in enumerate(cases):
+        cfg = CrawlConfig(
+            seeds=seeds,
+            per_host_budget=3,
+            max_waves=60,
+            expected_urls=10_000,
+            bloom_slices=4,
+            seen_buckets=8,
+            report_buckets=8,
+            seed_isin_max=0,
+        )
+        case_dir = tmp_path / f"case{i}"
+        oracle, engine, outcome = _run_both(
+            spark, case_dir, cfg, delay_hosts=delay_hosts
+        )
+        assert engine.seeds_df is not None, "join path not engaged"
+        assert _engine_seen(engine) == oracle.seen
+        assert _engine_report(engine) == oracle.report
+        assert _engine_order(engine) == oracle.crawl_order
+    commits = [
+        json.loads(p.read_text())
+        for p in (case_dir / "wh" / "_commits").glob("commit-*.json")
+    ]
+    assert any(c["wave"] >= 0 and c["metrics"].get("batch") == 0 for c in commits), (
+        "no politeness-delayed empty wave"
     )
-    oracle, engine, outcome = _run_both(spark, tmp_path, cfg)
-    assert engine.seeds_df is not None, "join path not engaged"
-    assert _engine_seen(engine) == oracle.seen
-    assert _engine_report(engine) == oracle.report
-    assert _engine_order(engine) == oracle.crawl_order
 
 
 def test_large_seed_bootstrap_no_expression_blowup(spark, tmp_path):

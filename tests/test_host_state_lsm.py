@@ -52,10 +52,10 @@ def _run_engine(spark, wh_dir, cfg):
 
 @pytest.fixture(scope="module")
 def lsm_run(spark, tmp_path_factory):
-    # threshold 0 → LSM from the first wave that has host_state (wave ≥ 1):
-    # wave 0 writes flat (n_hosts still 0 driver-side), wave 1 migrates
-    # flat → bucketed, waves 2+ append changed rows only — all three write
-    # paths exercised in one crawl
+    # threshold 0 → LSM from the first host_state write: the seed commit
+    # (wave −1) writes the bucketed layout, every wave after it appends
+    # changed rows only (the flat → bucketed crossing mid-crawl is
+    # test_lsm_threshold_crossing_matches_default)
     tmp = tmp_path_factory.mktemp("hs_lsm")
     return _run_engine(spark, tmp / "wh", _cfg(host_state_lsm_min_hosts=0))
 

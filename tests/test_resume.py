@@ -4,6 +4,8 @@ snapshot and converges to the identical final state with no re-fetch
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from helix_spark.config import CrawlConfig
@@ -76,6 +78,52 @@ def test_kill_and_resume_matches_uninterrupted(spark, universe, tmp_path):
     urls = [u for _, u in got_order]
     assert len(urls) == len(set(urls))
     assert out1.total_fetched + out2.total_fetched == len(want_order)
+    # run() never returns with an unpublished wave in flight: no pending
+    # commit tail, frontier manifest or host_state delta survives it
+    for eng in (full, part, resumed):
+        assert eng._tail_future is None
+        assert eng._pending_frontier_m is None
+        assert eng._pending_hs_delta is None
+
+
+def test_bootstrap_onto_existing_warehouse(spark, universe, tmp_path):
+    """A fresh engine bootstrapping onto a warehouse that already holds a
+    backlog admits only the URLs the warehouse does not hold, ranks them
+    above the queued rows, keeps n_hosts equal to the registered hosts, and
+    writes no host_state at all when every URL is already known."""
+    pages_pd = universe[0]
+    pages, assets, robots = _tables(spark, universe)
+    wh_dir = str(tmp_path / "boot")
+
+    def bootstrap(urls):
+        eng = CrawlEngine(spark, _cfg(40), wh_dir, pages, assets, robots)
+        feed = spark.createDataFrame([(u,) for u in urls], "url string")
+        return eng, eng.bootstrap_frontier(feed)
+
+    def host_state_files():
+        return sorted(
+            os.path.join(d, f)
+            for d, _, files in os.walk(os.path.join(wh_dir, "host_state"))
+            for f in files
+        )
+
+    all_urls = list(pages_pd["url"])
+    _, admitted = bootstrap(all_urls[:30])
+    assert admitted == 30
+    eng, admitted = bootstrap(all_urls)
+    assert admitted == len(all_urls) - 30
+
+    frontier = eng.wh.read_ranged("frontier")
+    n_rows = frontier.count()
+    assert frontier.select("url").distinct().count() == n_rows
+    assert frontier.select("priority").distinct().count() == n_rows
+    assert eng.wh.head_commit()["metrics"]["n_hosts"] == eng.read_host_state().count()
+
+    files = host_state_files()
+    eng, admitted = bootstrap(all_urls)
+    assert admitted == 0
+    assert host_state_files() == files
+    assert eng.wh.head_commit()["metrics"]["n_hosts"] == eng.read_host_state().count()
 
 
 def test_enqueue_urls_mid_crawl(spark, universe, tmp_path):
